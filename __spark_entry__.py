@@ -670,9 +670,10 @@ _TAIL = [
                               # interval-join shot intervals in the
                               # exact cross-multiplied integer
                               # timebase (a/Ra < b/fps <=> a*fps < b*Ra)
-    # rows-only crawl queries (no SQL oracle; the r2 harness skipped
-    # rows-only entries by design — sequential-oracle pytest is their
-    # ground truth):
+    # the four crawl_* entries are rows-only (no SQL oracle; the r2
+    # harness skipped rows-only entries by design — sequential-oracle
+    # pytest is their ground truth); text_density_extract, listed
+    # among them, has a DuckDB oracle in oracle_sql()
     "crawl_fetch_log",
     "crawl_doc_spans",
     "crawl_wave_metrics",

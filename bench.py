@@ -202,51 +202,48 @@ def main() -> None:
 
     extra = {}
     if os.environ.get("SPARK_GRAFT_SKIP_CRAWL_BENCH") != "1":
-        try:
-            from indigent_defense_stats_spark.plans import frontier as fr
+        from indigent_defense_stats_spark.plans import frontier as fr
 
-            # warm pass (small frontier): JIT + whole-stage-codegen
-            # warmup, the same protocol the per-query timings use —
-            # a cold first crawl in a fresh JVM measures the JVM, not
-            # the engine (observed ~2x)
-            fr.bench_crawl_throughput(spark, n_counties=24, n_days=5)
-            # best-of-2 measured runs (min-wall, as above): the crawl
-            # is ~60% of the headline total, so a single co-tenant
-            # spike would otherwise dominate the recorded figure
-            best_t, best_tput = float("inf"), 0.0
-            for _ in range(2):
-                t0 = time.time()
-                # 254 portals x 30 days: the r1/r2 config, kept for
-                # cross-round comparability of crawl_wave_loop — but
-                # at ~30k URLs its waves are fixed-cost-dominated
-                tput = fr.bench_crawl_throughput(
-                    spark, n_counties=254, n_days=30
-                )
-                el = time.time() - t0
-                if el < best_t:
-                    best_t, best_tput = el, tput
-            extra["crawl_urls_per_sec_wave30"] = round(best_tput, 1)
-            results["crawl_wave_loop"] = round(best_t, 3)
-            # steady-state config: 254 portals x 540 days (~420k URLs,
-            # ~14k URLs/wave) — waves big enough that per-wave
-            # scheduler/checkpoint fixed costs amortize, which is the
-            # faithful estimator for the 10^10-URL frontier target
-            # (BASELINE.json metric).  Costs only ~10 s more wall than
-            # the 30-day config while measuring ~9x the URL volume.
-            best_t5, best_tput5 = float("inf"), 0.0
-            for _ in range(2):
-                t0 = time.time()
-                tput = fr.bench_crawl_throughput(
-                    spark, n_counties=254, n_days=540
-                )
-                el = time.time() - t0
-                if el < best_t5:
-                    best_t5, best_tput5 = el, tput
-            extra["crawl_urls_per_sec"] = round(best_tput5, 1)
-            extra["crawl_config"] = "254 counties x 540 days (steady state)"
-            results["crawl_wave_loop_540d"] = round(best_t5, 3)
-        except Exception as ex:  # never let the crawl bench break the report
-            extra["crawl_error"] = str(ex)[:200]
+        # warm pass (small frontier): JIT + whole-stage-codegen
+        # warmup, the same protocol the per-query timings use —
+        # a cold first crawl in a fresh JVM measures the JVM, not
+        # the engine (observed ~2x)
+        fr.bench_crawl_throughput(spark, n_counties=24, n_days=5)
+        # best-of-2 measured runs (min-wall, as above): the crawl
+        # is ~60% of the headline total, so a single co-tenant
+        # spike would otherwise dominate the recorded figure
+        best_t, best_tput = float("inf"), 0.0
+        for _ in range(2):
+            t0 = time.time()
+            # 254 portals x 30 days: the r1/r2 config, kept for
+            # cross-round comparability of crawl_wave_loop — but
+            # at ~30k URLs its waves are fixed-cost-dominated
+            tput = fr.bench_crawl_throughput(
+                spark, n_counties=254, n_days=30
+            )
+            el = time.time() - t0
+            if el < best_t:
+                best_t, best_tput = el, tput
+        extra["crawl_urls_per_sec_wave30"] = round(best_tput, 1)
+        results["crawl_wave_loop"] = round(best_t, 3)
+        # steady-state config: 254 portals x 540 days (~420k URLs,
+        # ~14k URLs/wave) — waves big enough that per-wave
+        # scheduler/checkpoint fixed costs amortize, which is the
+        # faithful estimator for the 10^10-URL frontier target
+        # (BASELINE.json metric).  Costs only ~10 s more wall than
+        # the 30-day config while measuring ~9x the URL volume.
+        best_t5, best_tput5 = float("inf"), 0.0
+        for _ in range(2):
+            t0 = time.time()
+            tput = fr.bench_crawl_throughput(
+                spark, n_counties=254, n_days=540
+            )
+            el = time.time() - t0
+            if el < best_t5:
+                best_t5, best_tput5 = el, tput
+        extra["crawl_urls_per_sec"] = round(best_tput5, 1)
+        extra["crawl_config"] = "254 counties x 540 days (steady state)"
+        results["crawl_wave_loop_540d"] = round(best_t5, 3)
 
     total = round(sum(results.values()), 3)
     out = {
@@ -359,7 +356,7 @@ def main() -> None:
         "scaling_efficiency": headline_effs,
         "detail_file": detail_rel,
     }
-    for k in ("crawl_urls_per_sec", "crawl_urls_per_sec_wave30", "crawl_error"):
+    for k in ("crawl_urls_per_sec", "crawl_urls_per_sec_wave30"):
         if k in extra:
             compact[k] = extra[k]
     if "iterjoin_eps" in out:

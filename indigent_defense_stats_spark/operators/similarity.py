@@ -421,13 +421,9 @@ def ann_topk_ivf_indexed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same assignment, so it shares that query's baked-centroid
     replay oracle.  Pruning itself (probed directories only, via
     ``inputFiles()``) is asserted in pytest."""
-    import hashlib
-    import tempfile
+    from ..sources.tempdirs import pid_temp_dir
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"ids_ivf_index_{tag}_{os.getpid()}"
-    )
+    index_dir = pid_temp_dir("ivf_index", sf_dir)
     cents = build_ivf_index(spark, sf_dir, index_dir)
     q = _query_vector(spark, sf_dir)
     return ann_topk_ivf_indexed(spark, index_dir, cents, q)

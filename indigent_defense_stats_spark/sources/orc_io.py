@@ -24,14 +24,13 @@ the memoized one-time write of the tiny test corpus.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from indigent_defense_stats_spark.operators.textstats import md5_int
+from indigent_defense_stats_spark.sources.tempdirs import pid_temp_dir
 
 # sum md5_int mod this prime: 500 docs x <1e9 stays far under BIGINT,
 # and DuckDB's HUGEINT sum is CAST back down per the oracle-dtype
@@ -61,12 +60,7 @@ def read_orc_documents(spark: SparkSession, orc_dir: str) -> DataFrame:
 
 
 def _orc_dir_for(sf_dir: str) -> str:
-    # pid-suffixed: stable within a process (repeat calls overwrite)
-    # but never shared across concurrent drivers on one machine
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), f"ids_orc_docs_{tag}_{os.getpid()}"
-    )
+    return pid_temp_dir("orc_docs", sf_dir)
 
 
 def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,14 +41,13 @@ byte, lost record, or mis-framed boundary mismatches.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from indigent_defense_stats_spark.operators.textstats import md5_int
+from indigent_defense_stats_spark.sources.tempdirs import pid_temp_dir
 
 _HASH_MOD = 1_000_000_007
 _CRLF = "\r\n"
@@ -138,12 +137,7 @@ def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
 
 
 def _warc_dir_for(sf_dir: str) -> str:
-    # pid-suffixed: stable within a process (repeat calls overwrite)
-    # but never shared across concurrent drivers on one machine
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), f"ids_warc_docs_{tag}_{os.getpid()}"
-    )
+    return pid_temp_dir("warc_docs", sf_dir)
 
 
 def _doc_fetches(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,6 +3,7 @@ dedup, robots, resume — the BASELINE.json north_rule checks."""
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import date
 
 import pytest
@@ -281,3 +282,48 @@ def test_budgeted_crawl_resumes_across_run_calls(spark, tmp_path):
         eng.log_t.manifest(s).get("wave") for s in eng.log_t.snapshots()
     ]
     assert len(waves) == len(set(waves))
+
+
+def test_fetch_clock_spans_arrow_batches(spark, tmp_path, world):
+    """The fetch is one host-sorted mapInPandas task per core.  With
+    3-row Arrow batches a host's rows span several batches, and its
+    virtual clock must still run unbroken across them: each host's
+    (fetch_ts_ms, canonical_url, attempts) equals the oracle's dedup'd
+    fetches replayed wave by wave (one wave per reference depth) on a
+    per-host clock that advances 200 ms x attempt before each attempt."""
+    reg, log = world
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        eng = CrawlEngine(spark, str(tmp_path), reg, START, 2, n_buckets=4)
+        eng.run()
+        n_parts = eng._fetch(eng.seeds(), 0).rdd.getNumPartitions()
+        rows = eng.fetch_log().collect()
+    finally:
+        spark.conf.set(key, old)
+    assert n_parts == spark.sparkContext.defaultParallelism
+    # some host fetches more rows in one wave than a batch holds
+    per_wave = Counter((r["host"], r["wave"]) for r in rows)
+    assert max(per_wave.values()) > 3
+
+    eng_rows = {}
+    for r in rows:
+        eng_rows.setdefault(r["host"], []).append(
+            (r["fetch_ts_ms"], r["canonical_url"], r["attempts"])
+        )
+
+    expected = {}
+    for host in {f["host"] for f in log.fetches}:
+        first = {}
+        for f in log.fetches:
+            if f["host"] == host and f["url"] not in first:
+                first[f["url"]] = f
+        clock, seq = 0, []
+        for f in sorted(first.values(), key=lambda f: f["depth"]):
+            clock += sum(
+                oracle.POLITENESS_MS * (k + 1) for k in range(f["attempts"])
+            )
+            seq.append((clock, f["url"], f["attempts"]))
+        expected[host] = seq
+    assert {h: sorted(seq) for h, seq in eng_rows.items()} == expected

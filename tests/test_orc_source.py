@@ -4,6 +4,10 @@ parquet path gets from Catalyst)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 from indigent_defense_stats_spark.sources import orc_io
@@ -59,3 +63,28 @@ def test_orc_roundtrip_stats_matches_parquet_aggregate(spark):
         .collect()
     }
     assert got == want
+
+
+def test_orc_temp_dir_removed_at_process_exit(tmp_path):
+    """The per-pid ORC dir a process creates is gone once it exits."""
+    child = (
+        "import os, sys\n"
+        "from indigent_defense_stats_spark.sources import orc_io\n"
+        "d = orc_io._orc_dir_for(sys.argv[1])\n"
+        "os.makedirs(d)\n"
+        "with open(os.path.join(d, 'part-0.orc'), 'w') as f:\n"
+        "    f.write('x')\n"
+        "print(d)\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", child, SF_DIR],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.strip()
+    assert os.path.dirname(out) == str(tmp_path)
+    assert os.path.basename(out).startswith("ids_orc_docs_")
+    assert not os.path.exists(out)
