@@ -629,47 +629,6 @@ _TAIL = [
                               # driver-green history (r3/r4 #39) and
                               # the greedy-fill law stays pinned by
                               # pytest + the local oracle sweep
-    # round-5 session additions land in the tail (the graded 50-prefix
-    # is a committed manifest; promotion is an explicit rotation):
-    "wav_decode_stats",       # REAL RIFF/WAVE PCM decode — the audio
-                              # modality closed the way PNG/JPEG were;
-                              # lossless grammar -> exact DuckDB oracle
-    "wav_energy_windows",     # frame-level audio energy features over
-                              # the same real decode (VAD shape)
-    # round-5 third rotation: avi_frame_stats (REAL MJPEG-AVI demux +
-    # sampled-frame JPEG decode) and audio_fingerprint_neardup (real
-    # PCM -> delta-sign fingerprint -> banded Hamming verify) promoted
-    # into the graded prefix — the two new media modalities deserve
-    # hard driver rows; the two demotions below each keep their family
-    # graded via a sibling:
-    "stream_event_window_counts",  # tumbling windowed count: streaming
-                              # family keeps TWO graded rows
-                              # (stream_click_attribution #48,
-                              # session_windows #49); r04 driver-green
-                              # history at #47
-    "asof_attribution",       # as-of join: temporal family keeps
-                              # range_attribution graded; r04
-                              # driver-green history at #11
-    "video_ahash_neardup",    # video dedup: real AVI demux + frame
-                              # decode -> per-frame aHash temporal
-                              # signature (native HOFs) -> frame-hash
-                              # banding -> summed Hamming verify;
-                              # completes the media near-dup triangle
-                              # (pHash image / fingerprint audio /
-                              # temporal-signature video)
-    "audio_vad_segments",     # VAD utterance splitting: real PCM
-                              # energies -> per-clip mean threshold ->
-                              # gaps-and-islands segment aggregation
-    "video_shot_transitions", # scene segmentation: consecutive-frame
-                              # aHash Hamming with a cut flag (native
-                              # HOF fold over the signature array)
-    "video_frame_motion",     # static-clip filter: per-pixel temporal
-                              # gradient from real decoded frame pairs
-                              # (single-pass diff) + native rollup
-    "av_segment_alignment",   # cross-modal clip mining: VAD segments
-                              # interval-join shot intervals in the
-                              # exact cross-multiplied integer
-                              # timebase (a/Ra < b/fps <=> a*fps < b*Ra)
     # the four crawl_* entries are rows-only (no SQL oracle; the r2
     # harness skipped rows-only entries by design — sequential-oracle
     # pytest is their ground truth); text_density_extract, listed

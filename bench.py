@@ -114,19 +114,8 @@ OPTIONAL = [
     "winnow_matches",
     "click_hits",
     "click_communities_lpa",
-    # round-5: real JPEG decode and the audio/video modality closures
-    # (WAV PCM stats, MJPEG-AVI demux + sampled-frame decode)
+    # round-5: real JPEG decode
     "jpeg_decode_stats",
-    "wav_decode_stats",
-    "avi_frame_stats",
-    # round-5 continuation: the media near-dup triangle's audio/video
-    # vertices and the two segmentation operators over real codecs
-    "audio_fingerprint_neardup",
-    "video_ahash_neardup",
-    "audio_vad_segments",
-    "video_shot_transitions",
-    "video_frame_motion",
-    "av_segment_alignment",
     # round-5 coda: the end-to-end composition — crawled interleaved
     # spans -> media_ref attachments -> REAL JPEG/PNG decode
     "crawl_media_decode_stats",
@@ -307,12 +296,6 @@ def main() -> None:
             "crawl540@cluster_1to4",
             "crawl540_2to8",
             "politeness_pinned_tput_ratio_8to32",
-            # round-5: the real media decode chain (AVI demux + JPEG
-            # frame decode) scales like the fetchparse Python boundary;
-            # the 400k cell amortizes worker-spawn fixed costs after
-            # the codec vectorization made the 100k cell ~8 s at 32c
-            "mediadecode400k_2to8",
-            "mediadecode400k@submit_2to8",
         ):
             if k in effs:
                 headline_effs[k] = effs[k]

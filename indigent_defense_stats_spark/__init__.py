@@ -20,8 +20,8 @@ as a distributed Spark DataFrame program:
 - ``operators.dedup`` / ``operators.similarity`` /
   ``operators.textstats`` / ``operators.multimodal`` — the
   training-data-pipeline layer (exact + MinHash/SimHash/Jaccard dedup,
-  ANN similarity search, language id / quality / token stats,
-  multimodal span plumbing).
+  ANN similarity search, language id / quality / token stats, and
+  the mugshot/document-image media plumbing: PNG and baseline JPEG).
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions``
 where expressible, Arrow-vectorized pandas UDFs otherwise, never

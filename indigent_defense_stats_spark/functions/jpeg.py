@@ -357,8 +357,8 @@ def _decode_tables(bits_b: bytes, vals_b: bytes) -> tuple[dict, list[int]]:
 
     LUT entry for every 16-bit window whose prefix is a code:
     ``(code_length << 8) | symbol``; 0 = no code of length <= 16
-    prefixes this window.  Cached on the raw DHT payload — MJPEG
-    streams repeat the identical tables in every frame, so across a
+    prefixes this window.  Cached on the raw DHT payload — payloads
+    from one encoder repeat the identical tables, so across a
     mapInPandas batch the O(64K) build amortizes to zero."""
     bits, vals = list(bits_b), list(vals_b)
     table = _build_decode_table(bits, vals)

@@ -460,8 +460,7 @@ def text_density_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the span features are pure per-row folds over the
     scan (no Python); ONE doc_id-keyed Exchange is shared by the
     lag/lead window and the final per-doc aggregate (doc_id hash
-    partitioning satisfies the grouping key — the audio_vad_segments
-    pattern, budget-pinned).  No joins, no dimension tables; survives
+    partitioning satisfies the grouping key; budget-pinned).  No joins, no dimension tables; survives
     100 TB unchanged."""
     sp = interleaved_spans(spark, sf_dir).filter(F.col("kind") == "text")
     toks = F.split(F.col("text"), " ")

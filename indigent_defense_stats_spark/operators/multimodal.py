@@ -12,14 +12,11 @@ plumbing a 100 TB multimodal corpus needs:
   The default 'stub' fabricates deterministic metadata from the ref
   hash (no bytes needed); ``decoder='real'`` does a REAL decode of
   the payload bytes via the pure-stdlib codecs: PNG (functions/
-  png.py), baseline JPEG (functions/jpeg.py), PCM WAV audio
-  (functions/wav.py) and MJPEG-AVI video (functions/avi.py) — all
-  three modalities, sniffed by magic.  Anything else raises
-  ValueError naming the format — quarantine, not crash.
+  png.py) and baseline JPEG (functions/jpeg.py), sniffed by magic.
+  Anything else raises ValueError naming the format — quarantine,
+  not crash.
 - :func:`frame_sample` — every-nth-frame sampling rows via native
-  ``sequence``/``explode`` (no UDF); :func:`avi_frame_table` +
-  a native frame_idx filter + :func:`mjpeg_frame_stats` is the same
-  path over REAL video bytes.
+  ``sequence``/``explode`` (no UDF) over stub frame counts.
 
 Scale notes: decode is per-item local (zero shuffle); media tables
 should be bucketed by doc_id so media joins back to text co-partition.
@@ -63,10 +60,10 @@ def media_table(documents: DataFrame) -> DataFrame:
 def decode_media(media: DataFrame, decoder: str = "stub") -> DataFrame:
     """Attach decoded metadata.  'stub' fabricates deterministic values
     from the ref hash (works on the metadata-only media table);
-    'real' decodes actual bytes from a ``content`` column (PNG, JPEG,
-    PCM WAV, MJPEG AVI — see the media_payloads_* generators) —
+    'real' decodes actual bytes from a ``content`` column (PNG and
+    baseline JPEG — see the media_payloads_* generators) —
     width/height/format come from the decoded payload, not a header
-    sniff."""
+    sniff; any other magic raises ValueError."""
     if decoder == "real":
         if "content" not in media.columns:
             raise ValueError(
@@ -76,10 +73,8 @@ def decode_media(media: DataFrame, decoder: str = "stub") -> DataFrame:
             )
 
         def _real_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..functions import avi as avimod
             from ..functions import jpeg as jpegmod
             from ..functions import png as pngmod
-            from ..functions import wav as wavmod
 
             for pdf in batches:
                 if not len(pdf):
@@ -93,20 +88,10 @@ def decode_media(media: DataFrame, decoder: str = "stub") -> DataFrame:
                     elif c[:2] == b"\xff\xd8":
                         w, h, _nc, _px = jpegmod.decode_jpeg(c)
                         fmts.append("jpeg")
-                    elif c[:4] == b"RIFF" and c[8:12] == b"WAVE":
-                        # audio: width/height carry (frames, channels)
-                        # — the typed-metadata shape for 1-D media
-                        _rate, ch, nf, _raw = wavmod.decode_wav(c)
-                        w, h = nf, ch
-                        fmts.append("wav")
-                    elif c[:4] == b"RIFF" and c[8:12] == b"AVI ":
-                        w, h, _fps, _frames = avimod.decode_avi_mjpeg(c)
-                        fmts.append("avi")
                     else:
                         raise ValueError(
-                            "decoder='real' supports PNG, baseline JPEG,"
-                            " PCM WAV and MJPEG AVI in this container"
-                            " (libjpeg/ffmpeg absent);"
+                            "decoder='real' supports PNG and baseline"
+                            " JPEG in this container (libjpeg absent);"
                             f" got magic {c[:4]!r}"
                         )
                     ws.append(w)
@@ -646,407 +631,10 @@ def jpeg_pixel_stats(payloads: DataFrame) -> DataFrame:
     return payloads.mapInPandas(st, schema=PIXSTATS_SCHEMA)
 
 
-# WAV payload grammar (all arithmetic in doc_id, so the DuckDB oracle
-# recomputes decoded sample statistics WITHOUT parsing any binary):
-#   frames   nf = 256 + d % WAV_N_MOD
-#   channels ch = 2 when d % WAV_STEREO_EVERY == 0 else 1
-#   rate        = 8000 * (1 + d % WAV_RATE_MOD)
-#   interleaved sample i in [0, nf*ch):
-#       v[i] = (d*WAV_SAMPLE_A + i*WAV_SAMPLE_B) % 65536 - 32768
-#   an ICMT comment of doc_id-dependent length sits BETWEEN fmt and
-#   data, so every decode exercises the skip-unknown-chunk path (and
-#   half of them the RIFF odd-body pad byte)
-WAV_N_MOD = 1700
-WAV_STEREO_EVERY = 5
-WAV_RATE_MOD = 3
-WAV_SAMPLE_A = 31
-WAV_SAMPLE_B = 17
-WAV_WIN_FRAMES = 256  # energy-window width (frames), full windows only
-
-
-def media_payloads_wav(decoded: DataFrame) -> DataFrame:
-    """REAL RIFF/WAVE PCM payloads (chunk-walked, pad-byte-correct,
-    with a LIST/INFO chunk the decoder must skip) carrying
-    doc_id-arithmetic int16 samples — the audio analog of
-    :func:`media_payloads_png`.  format column is 'wav'."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import wav as wavmod
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            content = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 256 + d % WAV_N_MOD
-                ch = 2 if d % WAV_STEREO_EVERY == 0 else 1
-                rate = 8000 * (1 + d % WAV_RATE_MOD)
-                i = np.arange(nf * ch, dtype=np.int64)
-                v = (
-                    (d * WAV_SAMPLE_A + i * WAV_SAMPLE_B) % 65536 - 32768
-                ).astype("<i2")
-                content.append(
-                    wavmod.encode_wav(
-                        rate, ch, v.tobytes(), info=b"doc:%d" % d
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "format": ["wav"] * len(pdf),
-                    "content": content,
-                }
-            )
-
-    return decoded.select(
-        "doc_id", "media_ref", "media_kind"
-    ).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
-
-WAVSTATS_SCHEMA = (
-    "doc_id string, sample_rate int, channels int, n_frames int,"
-    " duration_ms int, sample_sum long, sample_min int, sample_max int"
-)
-WAVWIN_SCHEMA = "doc_id string, window_idx int, energy long"
-
-
-def wav_sample_stats(payloads: DataFrame) -> DataFrame:
-    """REAL-decode WAV payloads and aggregate per-clip sample
-    statistics (exact integers — PCM is lossless, so the
-    :func:`media_payloads_wav` grammar replays in SQL).  Any defect in
-    the chain (RIFF walk, INFO skip, pad byte, fmt validation, int16
-    endianness) shifts a sum and hash-mismatches the oracle."""
-
-    def st(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import wav as wavmod
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, c in zip(pdf["doc_id"], pdf["content"]):
-                rate, ch, nf, raw = wavmod.decode_wav(bytes(c))
-                a = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        rate,
-                        ch,
-                        nf,
-                        nf * 1000 // rate,
-                        int(a.sum()),
-                        int(a.min()),
-                        int(a.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "n_frames",
-                    "duration_ms", "sample_sum", "sample_min", "sample_max",
-                ],
-            )
-
-    return payloads.mapInPandas(st, schema=WAVSTATS_SCHEMA)
-
-
-def wav_energy_windows(payloads: DataFrame) -> DataFrame:
-    """Frame-level audio feature extraction over REAL decoded samples:
-    per-clip fixed-width energy windows (sum of squared int16 samples
-    over WAV_WIN_FRAMES frames, full windows only) — the VAD /
-    speech-segmentation feature shape a training pipeline computes
-    before an acoustic model.  Exact int64 arithmetic end to end, so
-    the grammar oracle replays every window."""
-
-    def win(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import wav as wavmod
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, idxs, energies = [], [], []
-            for doc_id, c in zip(pdf["doc_id"], pdf["content"]):
-                _rate, ch, nf, raw = wavmod.decode_wav(bytes(c))
-                a = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                n_win = nf // WAV_WIN_FRAMES
-                if not n_win:
-                    continue
-                per = WAV_WIN_FRAMES * ch
-                e = (
-                    (a[: n_win * per] ** 2)
-                    .reshape(n_win, per)
-                    .sum(axis=1)
-                )
-                ids.extend([doc_id] * n_win)
-                idxs.extend(range(n_win))
-                energies.extend(int(x) for x in e)
-            yield pd.DataFrame(
-                {"doc_id": ids, "window_idx": idxs, "energy": energies}
-            )
-
-    return payloads.mapInPandas(win, schema=WAVWIN_SCHEMA)
-
-
-# Audio-fingerprint grammar (group-mixed, like the pHash body grammar):
-# clips sharing g = doc_id % AFP_GROUPS are the SAME base waveform —
-# per-(g, window) md5 amplitudes decorrelate energy walks ACROSS
-# groups — plus one per-doc perturbed sample INSIDE window g % AFP_
-# WINDOWS, so same-group signatures differ in at most the two delta
-# bits that window touches (Hamming <= 2 < the 4-band pigeonhole
-# bound: every true pair shares a band).  All integer arithmetic in
-# doc_id, so the DuckDB oracle replays every sample, energy, bit.
-AFP_GROUPS = 100
-AFP_WINDOWS = 33  # 33 energy windows -> 32 delta-sign bits
-AFP_RATE = 16000
-AFP_HAM_MAX = 4
-
-
-def media_payloads_wav_groups(decoded: DataFrame) -> DataFrame:
-    """REAL mono PCM WAV payloads with group-mixed doc_id-arithmetic
-    samples — the audio near-dup corpus (same-group clips are
-    near-identical recordings).  format column is 'wav'."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        from ..functions import wav as wavmod
-
-        nf = AFP_WINDOWS * WAV_WIN_FRAMES
-        i = np.arange(nf, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            content = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                g = d % AFP_GROUPS
-                base = np.array(
-                    [
-                        int(
-                            hashlib.md5(f"a:{g}:{w}".encode()).hexdigest()[:15],
-                            16,
-                        )
-                        % 1024
-                        for w in range(AFP_WINDOWS)
-                    ],
-                    dtype=np.int64,
-                )
-                v = base[i // WAV_WIN_FRAMES] + i % 7
-                p = (g % AFP_WINDOWS) * WAV_WIN_FRAMES + d % WAV_WIN_FRAMES
-                v = v.copy()
-                v[p] += 1 + (d // AFP_GROUPS) % 3
-                content.append(
-                    wavmod.encode_wav(
-                        AFP_RATE, 1, v.astype("<i2").tobytes()
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "format": ["wav"] * len(pdf),
-                    "content": content,
-                }
-            )
-
-    return decoded.select(
-        "doc_id", "media_ref", "media_kind"
-    ).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
-
-def audio_fingerprint(payloads: DataFrame) -> DataFrame:
-    """32-bit audio fingerprint from REAL decoded PCM: the delta-sign
-    of consecutive energy windows (bit w = 1 iff e[w+1] > e[w]) — the
-    integer skeleton of Chromaprint/Shazam-style fingerprints (those
-    take deltas of spectral bands; same shape, same banding math).
-    The energies come from :func:`wav_energy_windows` (the real codec
-    chain); the bit packing is NATIVE Spark (array_sort + aggregate
-    HOF, JVM-side) — the Python boundary ends at the decode.
-    Returns (doc_id BIGINT, sig BIGINT)."""
-    e = wav_energy_windows(payloads)
-    return (
-        e.groupBy(F.col("doc_id").cast("long").alias("doc_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("window_idx", "energy"))
-            ).alias("ws")
-        )
-        .select(
-            "doc_id",
-            F.expr(
-                "aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, w) ->"
-                " acc + IF(ws[w + 1].energy > ws[w].energy,"
-                "          shiftleft(CAST(1 AS BIGINT), 31 - w),"
-                "          CAST(0 AS BIGINT)))"
-            ).alias("sig"),
-        )
-    )
-
-
-# MJPEG-AVI payload grammar (arithmetic in (doc_id, frame_idx), so the
-# DuckDB oracle replays decoded frame statistics WITHOUT any binary):
-#   frames  nfr = 2 + d % AVI_NFRAMES_MOD
-#   frame geometry reuses the JPEG flat-tile grammar (bw, bh, tiles);
-#   tile k of frame f of doc d = (d*JPEG_TILE_A + f*AVI_FRAME_C
-#                                 + k*JPEG_TILE_B) % 256
-#   fps = AVI_FPS; frame sampling keeps frame_idx % AVI_SAMPLE_EVERY=0
-AVI_NFRAMES_MOD = 4
-AVI_FPS = 12
-AVI_FRAME_C = 53
-AVI_SAMPLE_EVERY = 2
-MJPEG_FRAME_SCHEMA = (
-    "doc_id string, frame_idx int, n_frames int, fps int, frame binary"
-)
-
-
-def media_payloads_avi(decoded: DataFrame) -> DataFrame:
-    """REAL MJPEG-AVI payloads (RIFF hdrl/movi/idx1, every frame an
-    actual baseline JPEG from functions/jpeg.py) carrying
-    (doc_id, frame)-arithmetic flat-tile pixels — the video analog of
-    :func:`media_payloads_png`.  format column is 'avi'."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import avi as avimod
-        from ..functions import jpeg as jpegmod
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            content = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bw = 1 + d % JPEG_BW_MOD
-                bh = 1 + (d // JPEG_BW_MOD) % JPEG_BW_MOD
-                nfr = 2 + d % AVI_NFRAMES_MOD
-                frames = []
-                for f in range(nfr):
-                    tiles = (
-                        (
-                            d * JPEG_TILE_A
-                            + f * AVI_FRAME_C
-                            + np.arange(bw * bh) * JPEG_TILE_B
-                        )
-                        % 256
-                    ).astype(np.uint8)
-                    img = np.kron(
-                        tiles.reshape(bh, bw), np.ones((8, 8), dtype=np.uint8)
-                    )
-                    frames.append(
-                        jpegmod.encode_jpeg(bw * 8, bh * 8, img.tobytes())
-                    )
-                content.append(
-                    avimod.encode_avi_mjpeg(bw * 8, bh * 8, AVI_FPS, frames)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "format": ["avi"] * len(pdf),
-                    "content": content,
-                }
-            )
-
-    return decoded.select(
-        "doc_id", "media_ref", "media_kind"
-    ).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
-
-def avi_frame_table(payloads: DataFrame) -> DataFrame:
-    """Demux REAL AVI payloads into one row per frame (frame = the raw
-    JPEG bytes) — the container walk with idx1 verification, no pixel
-    work yet.  Frame sampling then happens as a NATIVE relational
-    filter between this stage and the pixel decode, so the optimizer
-    sees it (and at scale can drop unsampled frames before the
-    expensive decode stage)."""
-
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import avi as avimod
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, idxs, totals, fpss, blobs = [], [], [], [], []
-            for doc_id, c in zip(pdf["doc_id"], pdf["content"]):
-                _w, _h, fps, frames = avimod.decode_avi_mjpeg(bytes(c))
-                for f, fr in enumerate(frames):
-                    ids.append(doc_id)
-                    idxs.append(f)
-                    totals.append(len(frames))
-                    fpss.append(fps)
-                    blobs.append(fr)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": idxs,
-                    "n_frames": totals,
-                    "fps": fpss,
-                    "frame": blobs,
-                }
-            )
-
-    return payloads.mapInPandas(demux, schema=MJPEG_FRAME_SCHEMA)
-
-
-MJPEG_STATS_SCHEMA = (
-    "doc_id string, frame_idx int, width int, height int,"
-    " pixel_sum long, pixel_min int, pixel_max int"
-)
-
-
-def mjpeg_frame_stats(frames: DataFrame) -> DataFrame:
-    """REAL-decode sampled MJPEG frames (functions/jpeg.py) and emit
-    exact per-frame pixel statistics — the flat-tile exactness
-    contract makes every value (doc_id, frame_idx) arithmetic."""
-
-    def st(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import jpeg as jpegmod
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, fi, fr in zip(
-                pdf["doc_id"], pdf["frame_idx"], pdf["frame"]
-            ):
-                w, h, _nc, px = jpegmod.decode_jpeg(bytes(fr))
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    (doc_id, int(fi), w, h,
-                     int(a.sum()), int(a.min()), int(a.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height",
-                    "pixel_sum", "pixel_min", "pixel_max",
-                ],
-            )
-
-    return frames.mapInPandas(st, schema=MJPEG_STATS_SCHEMA)
-
-
 def frame_sample(decoded: DataFrame, every_n: int = 10) -> DataFrame:
     """Every-nth-frame sample rows (video-shaped path): frame count is
     fabricated from n_bytes by the stub; the sequence/explode plumbing
-    is the real thing.  For REAL frame bytes see
-    :func:`avi_frame_table` + the native frame_idx filter."""
+    is the real thing."""
     n_frames = (F.col("n_bytes") / 1000).cast("int") + 1
     return decoded.select(
         "doc_id",
@@ -1055,223 +643,3 @@ def frame_sample(decoded: DataFrame, every_n: int = 10) -> DataFrame:
             F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
         ).alias("frame_idx"),
     )
-
-
-# Video-signature grammar (group-mixed, like the pHash and audio-
-# fingerprint grammars): videos sharing g = doc_id % VID_GROUPS are
-# the SAME 4-frame base clip — per-(g, frame, tile) md5 tiles
-# decorrelate frame hashes ACROSS groups — plus one SUM-PRESERVING
-# per-doc perturbation (+delta on tile k1, -delta on tile k2, both
-# inside frame doc_id % VID_FRAMES).  The frame mean is untouched, so
-# only the two perturbed tiles' aHash bits can flip: same-group
-# signatures differ in <= 4 bits spread over <= 2 frames, leaving
-# >= 2 of the 4 frame-hash bands identical — every true pair is a
-# candidate AND verifies at VID_HAM_MAX.  All integer arithmetic in
-# doc_id, so the DuckDB oracle replays every tile, cell sum, bit.
-VID_GROUPS = 100
-VID_FRAMES = 4
-VID_GRID = 4  # 4x4 tiles -> 16 cells -> 16-bit frame hash
-VID_HAM_MAX = 4
-VID_CUT_T = 6  # shot-cut threshold on consecutive-frame Hamming
-
-
-def media_payloads_avi_groups(decoded: DataFrame) -> DataFrame:
-    """REAL MJPEG-AVI payloads with group-mixed doc_id-arithmetic
-    frames — the video near-dup corpus (same-group clips are
-    near-identical videos).  Fixed geometry: VID_FRAMES frames of
-    VID_GRID x VID_GRID flat 8x8 tiles (32x32 px).  format column is
-    'avi'."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        from ..functions import avi as avimod
-        from ..functions import jpeg as jpegmod
-
-        nt = VID_GRID * VID_GRID
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            content = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                g = d % VID_GROUPS
-                fp = d % VID_FRAMES
-                k1 = (d // VID_FRAMES) % nt
-                k2 = (k1 + 1 + (d // 64) % (nt - 1)) % nt
-                delta = 1 + (d // VID_GROUPS) % 7
-                frames = []
-                for f in range(VID_FRAMES):
-                    tiles = np.array(
-                        [
-                            8
-                            + int(
-                                hashlib.md5(
-                                    f"m:{g}:{f}:{k}".encode()
-                                ).hexdigest()[:15],
-                                16,
-                            )
-                            % 240
-                            for k in range(nt)
-                        ],
-                        dtype=np.int64,
-                    )
-                    if f == fp:
-                        tiles = tiles.copy()
-                        tiles[k1] += delta
-                        tiles[k2] -= delta
-                    img = np.kron(
-                        tiles.reshape(VID_GRID, VID_GRID).astype(np.uint8),
-                        np.ones((8, 8), dtype=np.uint8),
-                    )
-                    frames.append(
-                        jpegmod.encode_jpeg(
-                            VID_GRID * 8, VID_GRID * 8, img.tobytes()
-                        )
-                    )
-                content.append(
-                    avimod.encode_avi_mjpeg(
-                        VID_GRID * 8, VID_GRID * 8, AVI_FPS, frames
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "format": ["avi"] * len(pdf),
-                    "content": content,
-                }
-            )
-
-    return decoded.select(
-        "doc_id", "media_ref", "media_kind"
-    ).mapInPandas(gen, schema=PAYLOAD_SCHEMA)
-
-
-CELL_SUM_SCHEMA = (
-    "doc_id string, frame_idx int, cell_idx int, cell_sum long"
-)
-
-
-def frame_cell_sums(frames: DataFrame) -> DataFrame:
-    """REAL-decode demuxed frames (functions/jpeg.py) and emit the
-    8x8-block pixel sums — the downsample grid under a frame aHash.
-    cell_idx is row-major over the (h/8, w/8) grid; cell_sum is the
-    exact integer sum of the 64 pixels in that block, so the flat-tile
-    grammar makes every value (doc_id, frame_idx) arithmetic."""
-
-    def cs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import jpeg as jpegmod
-
-        cols = ["doc_id", "frame_idx", "cell_idx", "cell_sum"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, fi, fr in zip(
-                pdf["doc_id"], pdf["frame_idx"], pdf["frame"]
-            ):
-                w, h, _nc, px = jpegmod.decode_jpeg(bytes(fr))
-                a = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w)
-                )
-                c = a.reshape(h // 8, 8, w // 8, 8).sum(axis=(1, 3))
-                for ci, v in enumerate(c.flatten()):
-                    rows.append((doc_id, int(fi), ci, int(v)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return frames.mapInPandas(cs, schema=CELL_SUM_SCHEMA)
-
-
-def video_ahash(cells: DataFrame) -> DataFrame:
-    """Temporal video signature from REAL decoded frames: one 16-bit
-    aHash per frame (bit k = 1 iff cell k's mean is strictly above the
-    frame mean — integer form cell_sum*16 > sum(cell_sums)), returned
-    as fh: array<bigint> of VID_FRAMES frame hashes.  The grid fold is
-    NATIVE Spark (array_sort + nested aggregate/transform HOFs,
-    JVM-side) — the Python boundary ends at the pixel decode.
-    Returns (doc_id BIGINT, fh ARRAY<BIGINT>)."""
-    nt = VID_GRID * VID_GRID
-    return (
-        cells.groupBy(F.col("doc_id").cast("long").alias("doc_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("frame_idx", "cell_idx", "cell_sum")
-                )
-            ).alias("ws")
-        )
-        .selectExpr(
-            "doc_id",
-            "ws",
-            f"transform(sequence(0, {VID_FRAMES - 1}), f ->"
-            f" aggregate(sequence(0, {nt - 1}), CAST(0 AS BIGINT),"
-            f" (acc, k) -> acc + ws[f * {nt} + k].cell_sum)) AS fs",
-        )
-        .selectExpr(
-            "doc_id",
-            f"transform(sequence(0, {VID_FRAMES - 1}), f ->"
-            f" aggregate(sequence(0, {nt - 1}), CAST(0 AS BIGINT),"
-            f" (acc, k) -> acc + IF(ws[f * {nt} + k].cell_sum * {nt}"
-            f" > fs[f], shiftleft(CAST(1 AS BIGINT), {nt - 1} - k),"
-            " CAST(0 AS BIGINT)))) AS fh",
-        )
-    )
-
-
-MOTION_SCHEMA = (
-    "doc_id string, frame_idx int, abs_diff_sum long,"
-    " changed_px long, n_px long"
-)
-
-
-def mjpeg_motion_stats(payloads: DataFrame) -> DataFrame:
-    """Pixel-level temporal gradient over REAL decoded frames: for
-    every consecutive frame pair of an MJPEG-AVI payload, the exact
-    integer sum of per-pixel absolute differences and the count of
-    changed pixels — the motion-score input a video corpus filter
-    uses to drop static clips (slides, test cards) before training.
-    The pairwise diff runs inside ONE mapInPandas pass (both frames
-    of a pair decode in the same task; no shuffle to align them);
-    the flat-tile grammar keeps every value (doc_id, frame)
-    arithmetic for the oracle."""
-
-    def mo(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions import avi as avimod
-        from ..functions import jpeg as jpegmod
-
-        cols = ["doc_id", "frame_idx", "abs_diff_sum", "changed_px", "n_px"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id, c in zip(pdf["doc_id"], pdf["content"]):
-                _w, _h, _fps, frames = avimod.decode_avi_mjpeg(bytes(c))
-                prev = None
-                for f, fr in enumerate(frames):
-                    w, h, _nc, px = jpegmod.decode_jpeg(bytes(fr))
-                    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                    if prev is not None:
-                        d = np.abs(a - prev)
-                        rows.append(
-                            (
-                                doc_id,
-                                f,
-                                int(d.sum()),
-                                int((d != 0).sum()),
-                                int(a.size),
-                            )
-                        )
-                    prev = a
-            yield pd.DataFrame(rows, columns=cols)
-
-    return payloads.mapInPandas(mo, schema=MOTION_SCHEMA)

@@ -21,7 +21,6 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.window import Window
 
 from ..functions.money import parse_money
 from . import clean, multimodal, publish
@@ -321,8 +320,8 @@ def _media_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # Decouple codec parallelism from scan granularity: every consumer
-    # of this frame runs a CPU-heavy Arrow-batch codec stage (PNG/JPEG/
-    # WAV/AVI encode+decode), and a small-SF scan is 1-2 parquet splits
+    # of this frame runs a CPU-heavy Arrow-batch codec stage (PNG/JPEG
+    # encode+decode), and a small-SF scan is 1-2 parquet splits
     # — which would serialize the whole codec chain on 1-2 cores.  A
     # round-robin exchange of the O(row-metadata) input (doc_id +
     # media_ref strings, ~40 B/row — the payloads don't exist yet) is
@@ -508,383 +507,6 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.jpeg_pixel_stats(payloads)
 
 
-def wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode, end to end: generate actual RIFF/WAVE PCM
-    files (chunk-walked container with a LIST/INFO chunk the decoder
-    must skip and RIFF pad bytes) and decode them with the pure-stdlib
-    codec in functions/wav.py, aggregating exact sample statistics.
-    PCM is lossless, so the doc_id-arithmetic sample grammar
-    (multimodal.media_payloads_wav) gives the whole chain an exact
-    DuckDB oracle — the audio analog of png_decode_stats /
-    jpeg_decode_stats, closing the third media modality (image done
-    rounds 3-5; soundfile/librosa absent from the container by
-    design).
-
-    Scale shape: two map-only mapInPandas stages, zero shuffle;
-    decode cost is per-item local."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_wav(_media_decoded(spark, sf_dir))
-    return multimodal.wav_sample_stats(payloads)
-
-
-def wav_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-level audio features over REAL decoded PCM: fixed-width
-    energy windows (sum of squared int16 samples per WAV_WIN_FRAMES
-    frames) — the VAD/segmentation feature a speech-data pipeline
-    computes before filtering or aligning clips.  Exact int64
-    arithmetic end to end; the grammar oracle replays every window.
-
-    Scale shape: map-only (decode + windowed fold inside one
-    mapInPandas), zero shuffle; output is O(frames/window) rows."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_wav(_media_decoded(spark, sf_dir))
-    return multimodal.wav_energy_windows(payloads)
-
-
-def avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decode, end to end: generate actual MJPEG AVI files
-    (RIFF hdrl/movi/idx1 container; every frame an actual baseline
-    JPEG), demux them with the pure-stdlib container codec in
-    functions/avi.py (idx1-verified), sample every
-    AVI_SAMPLE_EVERY-th frame with a NATIVE filter between the demux
-    and decode stages, then decode the sampled frames with
-    functions/jpeg.py for exact pixel statistics.  The flat-tile
-    grammar makes the lossy frame pipeline bit-exact, so the DuckDB
-    oracle replays every statistic as (doc_id, frame_idx) arithmetic.
-    Closes the engine's LAST declared media stub: with PNG+JPEG
-    (images, rounds 3-5), WAV (audio) and MJPEG-AVI (video) all three
-    modalities now do real byte-level decode work (ffmpeg absent from
-    the container by design — a production image swaps PyAV in under
-    the identical mapInPandas contracts).
-
-    Scale shape: three map-only stages (generate -> demux -> decode)
-    with the frame-sample as a native filter the optimizer can see;
-    zero shuffle, decode cost per-item local."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_avi(_media_decoded(spark, sf_dir))
-    frames = multimodal.avi_frame_table(payloads).filter(
-        F.col("frame_idx") % multimodal.AVI_SAMPLE_EVERY == 0
-    )
-    return multimodal.mjpeg_frame_stats(frames)
-
-
-def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-duplicate detection over REAL decoded PCM — the
-    audio analog of media_phash_neardup and the dedup story for a
-    speech corpus: decode (functions/wav.py) -> energy windows ->
-    32-bit delta-sign fingerprint (native array_sort + aggregate HOF;
-    the Chromaprint shape) -> 4x8-bit LSH banding (pairs sharing any
-    band are candidates) -> exact Hamming verify at AFP_HAM_MAX.
-    Clip samples are group-mixed doc_id arithmetic
-    (multimodal.media_payloads_wav_groups), so the DuckDB oracle
-    replays every sample, window energy, signature bit, band and
-    Hamming distance.
-
-    Scale shape: fingerprinting is one map-only decode pass + one
-    doc-keyed aggregate (O(1) state per clip); banding shuffles 4
-    bytes per clip; the verify joins signature rows only — the same
-    linear-shuffle banding contract as the MinHash/pHash dedups.  The
-    signature table feeds 3 consumers (band explode + both verify
-    sides) and is localCheckpoint-pinned."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_wav_groups(
-        _media_decoded(spark, sf_dir)
-    )
-    fp = multimodal.audio_fingerprint(payloads).localCheckpoint(eager=False)
-    sig = F.col("sig")
-    bands = fp.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                F.shiftright(sig, 24).bitwiseAND(F.lit(255)),
-                F.shiftright(sig, 16).bitwiseAND(F.lit(255)),
-                F.shiftright(sig, 8).bitwiseAND(F.lit(255)),
-                sig.bitwiseAND(F.lit(255)),
-            )
-        ).alias("band_pos", "band_val"),
-    )
-    a = bands.select(F.col("doc_id").alias("d1"), "band_pos", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"), "band_pos", "band_val")
-    cand = (
-        a.join(b, ["band_pos", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-    )
-    s1 = fp.select(F.col("doc_id").alias("d1"), sig.alias("sig1"))
-    s2 = fp.select(F.col("doc_id").alias("d2"), sig.alias("sig2"))
-    ham = F.expr("bit_count(sig1 ^ sig2)").cast("int")
-    return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .select("d1", "d2", ham.alias("hamming"))
-        .filter(F.col("hamming") <= multimodal.AFP_HAM_MAX)
-    )
-
-
-def video_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-duplicate detection over REAL decoded frames — the
-    video analog of media_phash_neardup/audio_fingerprint_neardup,
-    completing the media near-dup triangle (image pHash, audio
-    fingerprint, video temporal signature): encode MJPEG-AVI
-    (functions/avi.py) -> demux (avi_frame_table, idx1-verified) ->
-    real per-frame JPEG decode to 8x8-block cell sums -> per-frame
-    16-bit aHash folded with native HOFs (multimodal.video_ahash) ->
-    per-frame-hash LSH banding (pairs sharing any frame hash are
-    candidates) -> exact Hamming verify over the full 64-bit temporal
-    signature at VID_HAM_MAX.  Clip tiles are group-mixed doc_id
-    arithmetic with a SUM-PRESERVING perturbation
-    (multimodal.media_payloads_avi_groups), so the DuckDB oracle
-    replays every tile, cell sum, hash bit, band and Hamming distance.
-
-    Scale shape: decode is two map-only mapInPandas passes (demux,
-    pixel decode) + one doc-keyed aggregate (O(1) state per clip);
-    banding shuffles VID_FRAMES 16-bit values per clip; the verify
-    joins signature rows only — the same linear-shuffle banding
-    contract as the MinHash/pHash/audio dedups.  The signature table
-    feeds 3 consumers (band explode + both verify sides) and is
-    localCheckpoint-pinned."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_avi_groups(
-        _media_decoded(spark, sf_dir)
-    )
-    cells = multimodal.frame_cell_sums(
-        multimodal.avi_frame_table(payloads)
-    )
-    sig = multimodal.video_ahash(cells).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id", F.posexplode("fh").alias("band_pos", "band_val")
-    )
-    a = bands.select(F.col("doc_id").alias("d1"), "band_pos", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"), "band_pos", "band_val")
-    cand = (
-        a.join(b, ["band_pos", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-    )
-    s1 = sig.select(F.col("doc_id").alias("d1"), F.col("fh").alias("f1"))
-    s2 = sig.select(F.col("doc_id").alias("d2"), F.col("fh").alias("f2"))
-    ham = F.expr(
-        "CAST(bit_count(f1[0] ^ f2[0]) + bit_count(f1[1] ^ f2[1])"
-        " + bit_count(f1[2] ^ f2[2]) + bit_count(f1[3] ^ f2[3]) AS INT)"
-    )
-    return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .select("d1", "d2", ham.alias("hamming"))
-        .filter(F.col("hamming") <= multimodal.VID_HAM_MAX)
-    )
-
-
-def audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Voice-activity segmentation over REAL decoded PCM — the
-    utterance-splitting step a speech-data pipeline runs before
-    transcription/alignment: decode (functions/wav.py) -> energy
-    windows -> per-clip activity threshold (window active iff
-    energy * n_windows > total_energy, the strict integer form of
-    'above the clip mean') -> gaps-and-islands (lag + running sum of
-    boundaries) -> one row per contiguous ACTIVE segment with its
-    window span and energy mass.  Exact int64 arithmetic end to end,
-    so the sample grammar replays the whole chain in SQL.
-
-    Scale shape: one doc-keyed Exchange shared by every window
-    function and the final (doc_id, seg_id) aggregate (doc_id
-    partitioning satisfies the superset grouping key, so Spark adds
-    no second shuffle); per-clip state is O(windows).  The decode
-    stays map-only mapInPandas."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_wav(_media_decoded(spark, sf_dir))
-    e = multimodal.wav_energy_windows(payloads)
-    w_doc = Window.partitionBy("doc_id")
-    w_ord = Window.partitionBy("doc_id").orderBy("window_idx")
-    lag_active = F.lag("active").over(w_ord)
-    segs = (
-        e.withColumn("n_win", F.count("*").over(w_doc))
-        .withColumn("tot", F.sum("energy").over(w_doc))
-        .withColumn(
-            "active",
-            (F.col("energy") * F.col("n_win") > F.col("tot")).cast("int"),
-        )
-        .withColumn(
-            "new_seg",
-            F.when(
-                lag_active.isNull() | (lag_active != F.col("active")), 1
-            ).otherwise(0),
-        )
-        .withColumn("seg_id", F.sum("new_seg").over(w_ord))
-    )
-    return (
-        segs.filter(F.col("active") == 1)
-        .groupBy("doc_id", "seg_id")
-        .agg(
-            F.min("window_idx").alias("seg_start"),
-            F.max("window_idx").alias("seg_end"),
-            F.count("*").alias("n_windows"),
-            F.sum("energy").alias("seg_energy"),
-        )
-        .drop("seg_id")
-    )
-
-
-def video_shot_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shot-boundary detection over REAL decoded frames — the scene
-    segmentation a video pipeline runs to pick representative frames:
-    the per-frame aHash signatures from :func:`video_ahash_neardup`'s
-    chain, then consecutive-frame Hamming distance via native HOFs
-    (transform over the signature array; zero extra shuffle beyond
-    the signature aggregate) with a cut flag at VID_CUT_T.  The
-    group-mixed tile grammar replays every distance in SQL.
-
-    Scale shape: identical to the signature build (two map-only
-    decode passes + one doc-keyed aggregate); the transition fold is
-    a plan-literal array expression, O(frames) per clip."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_avi_groups(
-        _media_decoded(spark, sf_dir)
-    )
-    cells = multimodal.frame_cell_sums(
-        multimodal.avi_frame_table(payloads)
-    )
-    nf = multimodal.VID_FRAMES
-    return (
-        multimodal.video_ahash(cells)
-        .selectExpr(
-            "doc_id",
-            f"explode(transform(sequence(1, {nf - 1}), f ->"
-            " struct(f AS frame_idx,"
-            " CAST(bit_count(fh[f] ^ fh[f - 1]) AS INT)"
-            " AS hamming_prev))) AS t",
-        )
-        .select(
-            "doc_id",
-            F.col("t.frame_idx").alias("frame_idx"),
-            F.col("t.hamming_prev").alias("hamming_prev"),
-            (F.col("t.hamming_prev") > multimodal.VID_CUT_T).alias(
-                "is_cut"
-            ),
-        )
-    )
-
-
-def video_frame_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Motion scoring over REAL decoded frames — the static-clip
-    filter a video corpus runs before training (drop slides / test
-    cards / frozen streams): per consecutive frame pair, the exact
-    integer sum of per-pixel absolute differences and changed-pixel
-    count (multimodal.mjpeg_motion_stats, one mapInPandas pass — both
-    frames of a pair decode in the same task, no shuffle to align
-    them), then a NATIVE per-clip rollup.  The flat-tile grammar
-    replays every pixel diff in SQL.
-
-    Scale shape: map-only decode + one doc-keyed aggregate; per-clip
-    state is O(1) (running sums)."""
-    from . import multimodal
-
-    payloads = multimodal.media_payloads_avi(_media_decoded(spark, sf_dir))
-    m = multimodal.mjpeg_motion_stats(payloads)
-    return m.groupBy("doc_id").agg(
-        F.count("*").alias("n_transitions"),
-        F.sum("abs_diff_sum").alias("motion_total"),
-        F.sum("changed_px").alias("changed_px_total"),
-        F.sum("n_px").alias("px_total"),
-    )
-
-
-def av_segment_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal temporal alignment — the clip-mining join a
-    multimodal pipeline runs to pair speech with the footage on
-    screen: VAD active segments (audio_vad_segments) interval-join
-    the shot intervals rebuilt from video_shot_transitions' cut
-    flags, per doc, with the overlap computed EXACTLY in the
-    cross-multiplied integer timebase (audio bounds are window
-    frames over rate Ra, video bounds are frame indices over fps;
-    a/Ra < b/fps <=> a*fps < b*Ra, so no floats anywhere and the
-    DuckDB oracle replays every unit).  overlap_units is in
-    1/(Ra*fps)-second units.
-
-    Scale shape: both sides aggregate doc-keyed; the alignment join
-    is a doc_id equi-join with a residual range predicate (per-doc
-    interval counts are tiny), the same single-Exchange form as the
-    as-of/range joins.  Shot rebuild is gaps-free: shot id = running
-    count of cuts, native window over the transition rows."""
-    from . import multimodal
-
-    fps = multimodal.AVI_FPS
-    w_frames = multimodal.WAV_WIN_FRAMES
-    nf = multimodal.VID_FRAMES
-    vad = audio_vad_segments(spark, sf_dir)
-    trans = video_shot_transitions(spark, sf_dir)
-    cuts = (
-        trans.groupBy("doc_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("is_cut"), F.col("frame_idx"))
-                )
-            ).alias("cuts")
-        )
-        .selectExpr(
-            "CAST(doc_id AS STRING) AS doc_id",
-            "transform(sequence(0, size(cuts)), i -> struct("
-            " IF(i = 0, 0, cuts[i - 1]) AS shot_start,"
-            f" IF(i = size(cuts), {nf}, cuts[i]) AS shot_end)) AS shots",
-        )
-    )
-    shots = cuts.select("doc_id", F.explode("shots").alias("s")).select(
-        "doc_id",
-        F.col("s.shot_start").alias("shot_start"),
-        F.col("s.shot_end").alias("shot_end"),
-    )
-    a = (
-        vad.withColumn(
-            "ra",
-            (
-                8000
-                * (
-                    1
-                    + F.col("doc_id").cast("long")
-                    % multimodal.WAV_RATE_MOD
-                )
-            ).cast("long"),
-        )
-        .withColumn("a_lo", F.col("seg_start").cast("long") * w_frames)
-        .withColumn(
-            "a_hi", (F.col("seg_end").cast("long") + 1) * w_frames
-        )
-    )
-    return (
-        a.join(shots, "doc_id")
-        .filter(
-            (F.col("a_lo") * fps < F.col("shot_end") * F.col("ra"))
-            & (F.col("shot_start") * F.col("ra") < F.col("a_hi") * fps)
-        )
-        .select(
-            "doc_id",
-            "seg_start",
-            "seg_end",
-            "shot_start",
-            "shot_end",
-            (
-                F.least(
-                    F.col("a_hi") * fps, F.col("shot_end") * F.col("ra")
-                )
-                - F.greatest(
-                    F.col("a_lo") * fps,
-                    F.col("shot_start") * F.col("ra"),
-                )
-            ).alias("overlap_units"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -902,15 +524,6 @@ QUERIES = {
     "png_decode_stats": png_decode_stats,
     "png_resize_stats": png_resize_stats,
     "jpeg_decode_stats": jpeg_decode_stats,
-    "wav_decode_stats": wav_decode_stats,
-    "wav_energy_windows": wav_energy_windows,
-    "avi_frame_stats": avi_frame_stats,
-    "audio_fingerprint_neardup": audio_fingerprint_neardup,
-    "video_ahash_neardup": video_ahash_neardup,
-    "audio_vad_segments": audio_vad_segments,
-    "video_shot_transitions": video_shot_transitions,
-    "video_frame_motion": video_frame_motion,
-    "av_segment_alignment": av_segment_alignment,
 }
 
 ORACLE_SQL = {
@@ -1058,469 +671,6 @@ ORACLE_SQL = {
                CAST(min(v) AS INT) AS pixel_min,
                CAST(max(v) AS INT) AS pixel_max
         FROM t GROUP BY doc_id, bw, bh
-    """,
-    # lossless-PCM replay of the REAL WAV decode: interleaved sample i
-    # of doc d is (d*A + i*B) % 65536 - 32768 — PCM round-trips
-    # bit-exactly, so every statistic is pure doc_id arithmetic
-    "wav_decode_stats": f"""
-        WITH m AS (
-            SELECT doc_id,
-                   8000 * (1 + doc_id % {multimodal.WAV_RATE_MOD}) AS rate,
-                   CASE WHEN doc_id % {multimodal.WAV_STEREO_EVERY} = 0
-                        THEN 2 ELSE 1 END AS ch,
-                   256 + doc_id % {multimodal.WAV_N_MOD} AS nf
-            FROM documents
-        ), s AS (
-            SELECT doc_id, rate, ch, nf,
-                   (doc_id * {multimodal.WAV_SAMPLE_A}
-                    + g.i * {multimodal.WAV_SAMPLE_B}) % 65536 - 32768 AS v
-            FROM m, unnest(generate_series(0, nf * ch - 1)) AS g(i)
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-               CAST(rate AS INT) AS sample_rate,
-               CAST(ch AS INT) AS channels,
-               CAST(nf AS INT) AS n_frames,
-               CAST(nf * 1000 // rate AS INT) AS duration_ms,
-               CAST(sum(v) AS BIGINT) AS sample_sum,
-               CAST(min(v) AS INT) AS sample_min,
-               CAST(max(v) AS INT) AS sample_max
-        FROM s GROUP BY doc_id, rate, ch, nf
-    """,
-    # windowed-energy replay: window w covers interleaved samples
-    # [w*W*ch, (w+1)*W*ch) of the same grammar; energy = sum(v*v)
-    "wav_energy_windows": f"""
-        WITH m AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % {multimodal.WAV_STEREO_EVERY} = 0
-                        THEN 2 ELSE 1 END AS ch,
-                   256 + doc_id % {multimodal.WAV_N_MOD} AS nf
-            FROM documents
-        ), w AS (
-            SELECT doc_id, ch, g.w AS window_idx
-            FROM m,
-                 unnest(generate_series(
-                     0, nf // {multimodal.WAV_WIN_FRAMES} - 1)) AS g(w)
-        ), s AS (
-            SELECT doc_id, window_idx,
-                   (doc_id * {multimodal.WAV_SAMPLE_A}
-                    + (window_idx * {multimodal.WAV_WIN_FRAMES} * ch + g.j)
-                      * {multimodal.WAV_SAMPLE_B}) % 65536 - 32768 AS v
-            FROM w,
-                 unnest(generate_series(
-                     0, {multimodal.WAV_WIN_FRAMES} * ch - 1)) AS g(j)
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-               CAST(window_idx AS INT) AS window_idx,
-               CAST(sum(v * v) AS BIGINT) AS energy
-        FROM s GROUP BY doc_id, window_idx
-    """,
-    # MJPEG replay: sampled frame f of doc d is a flat-tile JPEG whose
-    # tile k carries (d*A + f*C + k*B) % 256 — container demux is
-    # lossless framing and flat tiles are DCT-bit-exact, so the pixel
-    # statistics are pure (doc_id, frame) arithmetic
-    "avi_frame_stats": f"""
-        WITH m AS (
-            SELECT doc_id,
-                   1 + doc_id % {multimodal.JPEG_BW_MOD} AS bw,
-                   1 + (doc_id // {multimodal.JPEG_BW_MOD})
-                       % {multimodal.JPEG_BW_MOD} AS bh,
-                   2 + doc_id % {multimodal.AVI_NFRAMES_MOD} AS nfr
-            FROM documents
-        ), fr AS (
-            SELECT doc_id, bw, bh, g.f AS frame_idx
-            FROM m, unnest(generate_series(0, nfr - 1,
-                                           {multimodal.AVI_SAMPLE_EVERY}))
-                    AS g(f)
-        ), t AS (
-            SELECT doc_id, bw, bh, frame_idx,
-                   (doc_id * {multimodal.JPEG_TILE_A}
-                    + frame_idx * {multimodal.AVI_FRAME_C}
-                    + g.k * {multimodal.JPEG_TILE_B}) % 256 AS v
-            FROM fr, unnest(generate_series(0, bw * bh - 1)) AS g(k)
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-               CAST(frame_idx AS INT) AS frame_idx,
-               CAST(bw * 8 AS INT) AS width,
-               CAST(bh * 8 AS INT) AS height,
-               CAST(64 * sum(v) AS BIGINT) AS pixel_sum,
-               CAST(min(v) AS INT) AS pixel_min,
-               CAST(max(v) AS INT) AS pixel_max
-        FROM t GROUP BY doc_id, bw, bh, frame_idx
-    """,
-    # full independent replay of the audio-fingerprint near-dup:
-    # samples -> window energies -> delta-sign bits -> 8-bit bands ->
-    # candidate join -> Hamming verify.  All integer arithmetic.
-    "audio_fingerprint_neardup": f"""
-        WITH ids AS (SELECT doc_id FROM documents),
-        base AS (
-            SELECT doc_id, g.w AS w,
-                   ('0x' || left(md5('a:'
-                       || (doc_id % {multimodal.AFP_GROUPS})::VARCHAR
-                       || ':' || g.w::VARCHAR), 15))::BIGINT % 1024 AS b
-            FROM ids,
-                 unnest(generate_series(0, {multimodal.AFP_WINDOWS - 1}))
-                     AS g(w)
-        ), s AS (
-            SELECT doc_id, w,
-                   b + (w * {multimodal.WAV_WIN_FRAMES} + g.j) % 7
-                   + CASE WHEN w * {multimodal.WAV_WIN_FRAMES} + g.j =
-                          (doc_id % {multimodal.AFP_GROUPS}
-                           % {multimodal.AFP_WINDOWS})
-                              * {multimodal.WAV_WIN_FRAMES}
-                          + doc_id % {multimodal.WAV_WIN_FRAMES}
-                          THEN 1 + (doc_id // {multimodal.AFP_GROUPS}) % 3
-                          ELSE 0 END AS v
-            FROM base,
-                 unnest(generate_series(0, {multimodal.WAV_WIN_FRAMES - 1}))
-                     AS g(j)
-        ), e AS (
-            SELECT doc_id, w, sum(v * v) AS energy
-            FROM s GROUP BY doc_id, w
-        ), d AS (
-            SELECT doc_id, w, energy,
-                   lead(energy) OVER (PARTITION BY doc_id ORDER BY w)
-                       AS nexte
-            FROM e
-        ), sig AS (
-            SELECT doc_id,
-                   sum(CASE WHEN nexte > energy
-                            THEN (1::BIGINT << (31 - w)) ELSE 0 END)
-                       AS sig
-            FROM d WHERE w < 32 GROUP BY doc_id
-        ), bands AS (
-            SELECT doc_id, g.p AS band_pos,
-                   (sig >> (8 * (3 - g.p))) & 255 AS band_val
-            FROM sig, unnest(generate_series(0, 3)) AS g(p)
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-            FROM bands a
-            JOIN bands b ON a.band_pos = b.band_pos
-                        AND a.band_val = b.band_val
-                        AND a.doc_id < b.doc_id
-        )
-        SELECT c.d1, c.d2,
-               CAST(bit_count(xor(s1.sig, s2.sig)) AS INT) AS hamming
-        FROM cand c
-        JOIN sig s1 ON s1.doc_id = c.d1
-        JOIN sig s2 ON s2.doc_id = c.d2
-        WHERE bit_count(xor(s1.sig, s2.sig)) <= {multimodal.AFP_HAM_MAX}
-    """,
-    # cross-modal alignment replay: the VAD cascade (audio side), the
-    # video-signature cuts -> running-count shot ids -> shot intervals
-    # (video side), then the cross-multiplied integer interval join
-    "av_segment_alignment": f"""
-        WITH wm AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % {multimodal.WAV_STEREO_EVERY} = 0
-                        THEN 2 ELSE 1 END AS ch,
-                   256 + doc_id % {multimodal.WAV_N_MOD} AS nf
-            FROM documents
-        ), ww AS (
-            SELECT doc_id, ch, g.w AS window_idx
-            FROM wm,
-                 unnest(generate_series(
-                     0, nf // {multimodal.WAV_WIN_FRAMES} - 1)) AS g(w)
-        ), wsamp AS (
-            SELECT doc_id, window_idx,
-                   (doc_id * {multimodal.WAV_SAMPLE_A}
-                    + (window_idx * {multimodal.WAV_WIN_FRAMES} * ch + g.j)
-                      * {multimodal.WAV_SAMPLE_B}) % 65536 - 32768 AS v
-            FROM ww,
-                 unnest(generate_series(
-                     0, {multimodal.WAV_WIN_FRAMES} * ch - 1)) AS g(j)
-        ), we AS (
-            SELECT doc_id, window_idx, sum(v * v) AS energy
-            FROM wsamp GROUP BY doc_id, window_idx
-        ), wa AS (
-            SELECT doc_id, window_idx, energy,
-                   CASE WHEN energy * count(*) OVER (PARTITION BY doc_id)
-                        > sum(energy) OVER (PARTITION BY doc_id)
-                        THEN 1 ELSE 0 END AS active
-            FROM we
-        ), wf AS (
-            SELECT *, CASE WHEN lag(active) OVER (
-                               PARTITION BY doc_id ORDER BY window_idx)
-                           IS DISTINCT FROM active
-                           THEN 1 ELSE 0 END AS new_seg
-            FROM wa
-        ), wg AS (
-            SELECT *, sum(new_seg) OVER (
-                          PARTITION BY doc_id ORDER BY window_idx
-                      ) AS seg_id
-            FROM wf
-        ), vseg AS (
-            SELECT doc_id,
-                   min(window_idx) AS seg_start,
-                   max(window_idx) AS seg_end
-            FROM wg WHERE active = 1
-            GROUP BY doc_id, seg_id
-        ), ids AS (SELECT doc_id FROM documents),
-        tiles AS (
-            SELECT doc_id, f.f AS f, k.k AS k,
-                   8 + ('0x' || left(md5('m:'
-                       || (doc_id % {multimodal.VID_GROUPS})::VARCHAR
-                       || ':' || f.f::VARCHAR
-                       || ':' || k.k::VARCHAR), 15))::BIGINT % 240
-                   + CASE WHEN f.f = doc_id % {multimodal.VID_FRAMES}
-                          AND k.k = (doc_id // {multimodal.VID_FRAMES})
-                              % {multimodal.VID_GRID ** 2}
-                          THEN 1 + (doc_id // {multimodal.VID_GROUPS}) % 7
-                          ELSE 0 END
-                   - CASE WHEN f.f = doc_id % {multimodal.VID_FRAMES}
-                          AND k.k = ((doc_id // {multimodal.VID_FRAMES})
-                                     % {multimodal.VID_GRID ** 2}
-                                     + 1 + (doc_id // 64)
-                                     % {multimodal.VID_GRID ** 2 - 1})
-                              % {multimodal.VID_GRID ** 2}
-                          THEN 1 + (doc_id // {multimodal.VID_GROUPS}) % 7
-                          ELSE 0 END AS tile
-            FROM ids,
-                 unnest(generate_series(0, {multimodal.VID_FRAMES - 1}))
-                     AS f(f),
-                 unnest(generate_series(0, {multimodal.VID_GRID ** 2 - 1}))
-                     AS k(k)
-        ), fsum AS (
-            SELECT doc_id, f, sum(tile) AS fs
-            FROM tiles GROUP BY doc_id, f
-        ), fh AS (
-            SELECT t.doc_id, t.f,
-                   sum(CASE WHEN t.tile * {multimodal.VID_GRID ** 2} > s.fs
-                            THEN (1::BIGINT
-                                  << ({multimodal.VID_GRID ** 2 - 1} - t.k))
-                            ELSE 0 END) AS h
-            FROM tiles t
-            JOIN fsum s ON s.doc_id = t.doc_id AND s.f = t.f
-            GROUP BY t.doc_id, t.f
-        ), tr AS (
-            SELECT cur.doc_id, cur.f,
-                   CASE WHEN bit_count(xor(cur.h, prv.h))
-                        > {multimodal.VID_CUT_T} THEN 1 ELSE 0 END AS cut
-            FROM fh cur
-            JOIN fh prv ON prv.doc_id = cur.doc_id AND prv.f = cur.f - 1
-        ), allf AS (
-            SELECT doc_id, 0 AS f, 0 AS cut FROM ids
-            UNION ALL SELECT doc_id, f, cut FROM tr
-        ), sid AS (
-            SELECT doc_id, f,
-                   sum(cut) OVER (PARTITION BY doc_id ORDER BY f) AS sid
-            FROM allf
-        ), shots AS (
-            SELECT doc_id, min(f) AS shot_start, max(f) + 1 AS shot_end
-            FROM sid GROUP BY doc_id, sid
-        ), aud AS (
-            SELECT doc_id, seg_start, seg_end,
-                   8000 * (1 + doc_id % {multimodal.WAV_RATE_MOD}) AS ra,
-                   seg_start * {multimodal.WAV_WIN_FRAMES} AS a_lo,
-                   (seg_end + 1) * {multimodal.WAV_WIN_FRAMES} AS a_hi
-            FROM vseg
-        )
-        SELECT CAST(a.doc_id AS VARCHAR) AS doc_id,
-               CAST(a.seg_start AS INT) AS seg_start,
-               CAST(a.seg_end AS INT) AS seg_end,
-               CAST(s.shot_start AS INT) AS shot_start,
-               CAST(s.shot_end AS INT) AS shot_end,
-               CAST(least(a.a_hi * {multimodal.AVI_FPS},
-                          s.shot_end * a.ra)
-                    - greatest(a.a_lo * {multimodal.AVI_FPS},
-                               s.shot_start * a.ra)
-                    AS BIGINT) AS overlap_units
-        FROM aud a
-        JOIN shots s ON s.doc_id = a.doc_id
-        WHERE a.a_lo * {multimodal.AVI_FPS} < s.shot_end * a.ra
-          AND s.shot_start * a.ra < a.a_hi * {multimodal.AVI_FPS}
-    """,
-    # motion replay: consecutive-frame tile diffs of the per-doc AVI
-    # grammar; each flat tile covers 64 pixels, so pixel-level sums
-    # are 64x the tile-level sums
-    "video_frame_motion": f"""
-        WITH m AS (
-            SELECT doc_id,
-                   1 + doc_id % {multimodal.JPEG_BW_MOD} AS bw,
-                   1 + (doc_id // {multimodal.JPEG_BW_MOD})
-                       % {multimodal.JPEG_BW_MOD} AS bh,
-                   2 + doc_id % {multimodal.AVI_NFRAMES_MOD} AS nfr
-            FROM documents
-        ), t AS (
-            SELECT doc_id,
-                   (doc_id * {multimodal.JPEG_TILE_A}
-                    + f.f * {multimodal.AVI_FRAME_C}
-                    + k.k * {multimodal.JPEG_TILE_B}) % 256 AS a,
-                   (doc_id * {multimodal.JPEG_TILE_A}
-                    + (f.f - 1) * {multimodal.AVI_FRAME_C}
-                    + k.k * {multimodal.JPEG_TILE_B}) % 256 AS b
-            FROM m,
-                 unnest(generate_series(1, nfr - 1)) AS f(f),
-                 unnest(generate_series(0, bw * bh - 1)) AS k(k)
-        )
-        SELECT CAST(t.doc_id AS VARCHAR) AS doc_id,
-               CAST(max(m.nfr) - 1 AS BIGINT) AS n_transitions,
-               CAST(64 * sum(abs(t.a - t.b)) AS BIGINT) AS motion_total,
-               CAST(64 * sum(CASE WHEN t.a <> t.b THEN 1 ELSE 0 END)
-                    AS BIGINT) AS changed_px_total,
-               CAST((max(m.nfr) - 1) * max(m.bw) * max(m.bh) * 64
-                    AS BIGINT) AS px_total
-        FROM t JOIN m ON m.doc_id = t.doc_id
-        GROUP BY t.doc_id
-    """,
-    # VAD replay: the wav_energy_windows grammar, then the identical
-    # window-function cascade (per-clip mean threshold in strict
-    # integer form, lag-boundary flags, running-sum segment ids,
-    # active-island aggregation)
-    "audio_vad_segments": f"""
-        WITH m AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % {multimodal.WAV_STEREO_EVERY} = 0
-                        THEN 2 ELSE 1 END AS ch,
-                   256 + doc_id % {multimodal.WAV_N_MOD} AS nf
-            FROM documents
-        ), w AS (
-            SELECT doc_id, ch, g.w AS window_idx
-            FROM m,
-                 unnest(generate_series(
-                     0, nf // {multimodal.WAV_WIN_FRAMES} - 1)) AS g(w)
-        ), s AS (
-            SELECT doc_id, window_idx,
-                   (doc_id * {multimodal.WAV_SAMPLE_A}
-                    + (window_idx * {multimodal.WAV_WIN_FRAMES} * ch + g.j)
-                      * {multimodal.WAV_SAMPLE_B}) % 65536 - 32768 AS v
-            FROM w,
-                 unnest(generate_series(
-                     0, {multimodal.WAV_WIN_FRAMES} * ch - 1)) AS g(j)
-        ), e AS (
-            SELECT doc_id, window_idx, sum(v * v) AS energy
-            FROM s GROUP BY doc_id, window_idx
-        ), a AS (
-            SELECT doc_id, window_idx, energy,
-                   CASE WHEN energy * count(*) OVER (PARTITION BY doc_id)
-                        > sum(energy) OVER (PARTITION BY doc_id)
-                        THEN 1 ELSE 0 END AS active
-            FROM e
-        ), f AS (
-            SELECT *, CASE WHEN lag(active) OVER (
-                               PARTITION BY doc_id ORDER BY window_idx)
-                           IS DISTINCT FROM active
-                           THEN 1 ELSE 0 END AS new_seg
-            FROM a
-        ), g AS (
-            SELECT *, sum(new_seg) OVER (
-                          PARTITION BY doc_id ORDER BY window_idx
-                      ) AS seg_id
-            FROM f
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-               CAST(min(window_idx) AS INT) AS seg_start,
-               CAST(max(window_idx) AS INT) AS seg_end,
-               CAST(count(*) AS BIGINT) AS n_windows,
-               CAST(sum(energy) AS BIGINT) AS seg_energy
-        FROM g WHERE active = 1
-        GROUP BY doc_id, seg_id
-    """,
-    # shot-transition replay: the video-signature fh CTE, then the
-    # consecutive-frame Hamming via a self-join on f-1
-    "video_shot_transitions": f"""
-        WITH ids AS (SELECT doc_id FROM documents),
-        tiles AS (
-            SELECT doc_id, f.f AS f, k.k AS k,
-                   8 + ('0x' || left(md5('m:'
-                       || (doc_id % {multimodal.VID_GROUPS})::VARCHAR
-                       || ':' || f.f::VARCHAR
-                       || ':' || k.k::VARCHAR), 15))::BIGINT % 240
-                   + CASE WHEN f.f = doc_id % {multimodal.VID_FRAMES}
-                          AND k.k = (doc_id // {multimodal.VID_FRAMES})
-                              % {multimodal.VID_GRID ** 2}
-                          THEN 1 + (doc_id // {multimodal.VID_GROUPS}) % 7
-                          ELSE 0 END
-                   - CASE WHEN f.f = doc_id % {multimodal.VID_FRAMES}
-                          AND k.k = ((doc_id // {multimodal.VID_FRAMES})
-                                     % {multimodal.VID_GRID ** 2}
-                                     + 1 + (doc_id // 64)
-                                     % {multimodal.VID_GRID ** 2 - 1})
-                              % {multimodal.VID_GRID ** 2}
-                          THEN 1 + (doc_id // {multimodal.VID_GROUPS}) % 7
-                          ELSE 0 END AS tile
-            FROM ids,
-                 unnest(generate_series(0, {multimodal.VID_FRAMES - 1}))
-                     AS f(f),
-                 unnest(generate_series(0, {multimodal.VID_GRID ** 2 - 1}))
-                     AS k(k)
-        ), fsum AS (
-            SELECT doc_id, f, sum(tile) AS fs
-            FROM tiles GROUP BY doc_id, f
-        ), fh AS (
-            SELECT t.doc_id, t.f,
-                   sum(CASE WHEN t.tile * {multimodal.VID_GRID ** 2} > s.fs
-                            THEN (1::BIGINT
-                                  << ({multimodal.VID_GRID ** 2 - 1} - t.k))
-                            ELSE 0 END) AS h
-            FROM tiles t
-            JOIN fsum s ON s.doc_id = t.doc_id AND s.f = t.f
-            GROUP BY t.doc_id, t.f
-        )
-        SELECT cur.doc_id,
-               CAST(cur.f AS INT) AS frame_idx,
-               CAST(bit_count(xor(cur.h, prv.h)) AS INT) AS hamming_prev,
-               bit_count(xor(cur.h, prv.h)) > {multimodal.VID_CUT_T}
-                   AS is_cut
-        FROM fh cur
-        JOIN fh prv ON prv.doc_id = cur.doc_id AND prv.f = cur.f - 1
-    """,
-    # full independent replay of the video-signature near-dup: tiles
-    # (md5 base + sum-preserving perturbation) -> per-frame 16-bit
-    # aHash (cell vs frame mean in tile units: tile*16 > sum(tiles))
-    # -> frame-hash bands -> candidate join -> summed Hamming verify.
-    # All integer arithmetic; cell_sum = tile*64 cancels the 64 on
-    # both sides of the Spark comparison, so tile units replay it
-    # exactly.
-    "video_ahash_neardup": f"""
-        WITH ids AS (SELECT doc_id FROM documents),
-        tiles AS (
-            SELECT doc_id, f.f AS f, k.k AS k,
-                   8 + ('0x' || left(md5('m:'
-                       || (doc_id % {multimodal.VID_GROUPS})::VARCHAR
-                       || ':' || f.f::VARCHAR
-                       || ':' || k.k::VARCHAR), 15))::BIGINT % 240
-                   + CASE WHEN f.f = doc_id % {multimodal.VID_FRAMES}
-                          AND k.k = (doc_id // {multimodal.VID_FRAMES})
-                              % {multimodal.VID_GRID ** 2}
-                          THEN 1 + (doc_id // {multimodal.VID_GROUPS}) % 7
-                          ELSE 0 END
-                   - CASE WHEN f.f = doc_id % {multimodal.VID_FRAMES}
-                          AND k.k = ((doc_id // {multimodal.VID_FRAMES})
-                                     % {multimodal.VID_GRID ** 2}
-                                     + 1 + (doc_id // 64)
-                                     % {multimodal.VID_GRID ** 2 - 1})
-                              % {multimodal.VID_GRID ** 2}
-                          THEN 1 + (doc_id // {multimodal.VID_GROUPS}) % 7
-                          ELSE 0 END AS tile
-            FROM ids,
-                 unnest(generate_series(0, {multimodal.VID_FRAMES - 1}))
-                     AS f(f),
-                 unnest(generate_series(0, {multimodal.VID_GRID ** 2 - 1}))
-                     AS k(k)
-        ), fsum AS (
-            SELECT doc_id, f, sum(tile) AS fs
-            FROM tiles GROUP BY doc_id, f
-        ), fh AS (
-            SELECT t.doc_id, t.f,
-                   sum(CASE WHEN t.tile * {multimodal.VID_GRID ** 2} > s.fs
-                            THEN (1::BIGINT
-                                  << ({multimodal.VID_GRID ** 2 - 1} - t.k))
-                            ELSE 0 END) AS h
-            FROM tiles t
-            JOIN fsum s ON s.doc_id = t.doc_id AND s.f = t.f
-            GROUP BY t.doc_id, t.f
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-            FROM fh a
-            JOIN fh b ON a.f = b.f AND a.h = b.h AND a.doc_id < b.doc_id
-        )
-        SELECT c.d1, c.d2,
-               CAST(sum(bit_count(xor(x.h, y.h))) AS INT) AS hamming
-        FROM cand c
-        JOIN fh x ON x.doc_id = c.d1
-        JOIN fh y ON y.doc_id = c.d2 AND y.f = x.f
-        GROUP BY c.d1, c.d2
-        HAVING sum(bit_count(xor(x.h, y.h))) <= {multimodal.VID_HAM_MAX}
     """,
     "media_dimensions": """
         SELECT CAST(doc_id AS VARCHAR) AS doc_id,

@@ -21,21 +21,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..plans import bloom
 from ..sources.catalog import SnapshotTable
-
-BLOOM_BUCKETS = 32
-BLOOM_BITS = 1 << 20
 
 
 def publish(
     cleaned: DataFrame,
     target: SnapshotTable,
     today: str,
-    bloom_state: SnapshotTable | None = None,
-    stats: dict | None = None,
-    bloom_buckets: int = BLOOM_BUCKETS,
-    bloom_bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """Insert new versions of *cleaned* into *target*; returns the rows
     inserted (with id + version).  ``today`` is MM-DD-YYYY, injected for
@@ -50,46 +42,11 @@ def publish(
     only the latest batch and would re-insert previously-seen content
     at version 1 from the third publish onward.
 
-    ``bloom_state`` (round-3 verdict watch item): without it, every
-    publish checks the incoming batch against the FULL published
-    history's ``html_hash`` column via the broadcast-semi rewrite
-    (history ⋉ broadcast(batch keys) → broadcast anti) — column-pruned,
-    map-side, never shuffled, but still one full hash-column SCAN per
-    publish at 100x.  Pass a SnapshotTable
-    (overwrite mode) holding a partitioned Bloom over all published
-    hashes and the anti-join degrades gracefully: the batch probes the
-    O(n_buckets)-row state first (plans/bloom.py, the frontier's
-    seen-filter machinery), definite negatives skip the history
-    entirely, and when the batch has NO bloom positives — the common
-    steady-state refresh, all-new content — the exact anti-join is
-    skipped altogether and the history hash column is never scanned.
-    The state is maintained INCREMENTALLY: each publish ORs in bits
-    for the just-inserted hashes only (O(batch)), never rescanning
-    history; first use backfills from the existing table once.
-
-    Coherence gate: each bloom write records the target snapshot it
-    absorbed (``target_snap`` in the manifest).  A later publish
-    trusts the state ONLY if that snapshot is still the target's head
-    — if any publish touched the target without this bloom_state, the
-    state is silently missing those hashes (bloom false negatives →
-    duplicate inserts), so a mismatched head triggers a one-time
-    rebuild from history instead.  ``bloom_state`` must be an
-    OVERWRITE-mode table (append mode would stack per-bucket
-    generations and ``bloom.probe`` reads one arbitrary generation —
-    enforced with ValueError).
-
-    ``stats`` (optional dict) receives bloom_maybe_seen /
-    exact_join_skipped / bloom_rebuilt for observability and tests
-    (populated whenever ``bloom_state`` is passed, including the
-    first-generation publish into an empty target).
-
-    ``bloom_buckets`` / ``bloom_bits`` size the partitioned filter
-    (k=5 double hashing needs ~10 bits/key for ~1% fp, so capacity ≈
-    buckets·bits/10); the defaults fit the sandbox corpus — a
-    deployment sizes them for its history and MUST keep them constant
-    across publishes into the same bloom_state (bits from different
-    geometries cannot be OR-merged; the coherence gate catches a
-    mismatch only via the rebuild path)."""
+    The content-seen check is a broadcast-semi anti-join: the batch's
+    ``html_hash`` keys are broadcast against the FULL published
+    history's ``html_hash`` column (history ⋉ broadcast(batch keys) →
+    broadcast anti) — column-pruned, map-side, never shuffled; one
+    hash-column scan per publish."""
     if getattr(target, "mode", None) == "overwrite" and target.latest() is not None:
         # an overwrite-mode target keeps only the latest batch, so a
         # SECOND direct publish would forget earlier hashes and
@@ -115,107 +72,28 @@ def publish(
         .drop("__rn")
     )
     # batch key set for the base_versions pruning below — captured
-    # before the anti-join branch reassigns `incoming`
+    # before the anti-join reassigns `incoming`
     incoming_keys = incoming.select("case_number").distinct()
-    state = None
-    if bloom_state is not None:
-        if bloom_state.mode != "overwrite":
-            raise ValueError(
-                "bloom_state must be an overwrite-mode SnapshotTable: in"
-                " append mode read() stacks per-bucket generations and"
-                " bloom.probe uses an arbitrary one -> false negatives"
-                " -> silent duplicate inserts"
-            )
-        bsnap = bloom_state.latest()
-        if bsnap is not None:
-            # coherence gate (see docstring): trust the state only if
-            # it absorbed the CURRENT head of THIS target — both the
-            # snapshot number and the target identity must match (a
-            # bloom shared across two targets, or a wiped-and-reseeded
-            # target directory, can reproduce a bare snap number);
-            # otherwise fall through with state=None and rebuild below
-            m = bloom_state.manifest(bsnap)
-            if m.get("target_snap") == target.latest() and m.get(
-                "target_path"
-            ) == getattr(target, "path", None):
-                state = bloom_state.read()
-        if stats is not None:
-            stats["bloom_maybe_seen"] = 0
-            stats["exact_join_skipped"] = False
-            stats["bloom_rebuilt"] = False
-    rebuilt = False
     if existing is not None and not existing.isEmpty():
-        if bloom_state is not None:
-            if state is None or state.isEmpty():
-                # one-time backfill/rebuild from history (only scan of
-                # its hash column the bloom path ever takes after this)
-                state = bloom.build(
-                    existing.select("html_hash"), "html_hash",
-                    bloom_buckets, bloom_bits,
-                ).localCheckpoint(eager=True)
-                rebuilt = True
-                if stats is not None:
-                    stats["bloom_rebuilt"] = True
-            # probe a NARROW hash projection — the wide record (nested
-            # charge/disposition arrays) never rides the Arrow probe
-            # stage, and at scale only the key column shuffles
-            maybe_hashes = (
-                bloom.probe(
-                    bloom.with_bucket_and_hashes(
-                        incoming.select("html_hash"), "html_hash",
-                        bloom_buckets,
-                    ),
-                    state,
-                    bloom_bits,
-                )
-                .filter(F.col("maybe_seen"))
-                .select("html_hash")
-                .localCheckpoint(eager=True)
-            )
-            n_maybe = maybe_hashes.count()  # bounded: <= batch keys
-            if n_maybe == 0:
-                # no bloom positive -> no row can exist in history
-                # (no false negatives): skip the exact join, and with
-                # it the full history hash-column scan
-                pass
-            else:
-                # exact verify ONLY the positives against history,
-                # then anti-join incoming against the confirmed-seen
-                # set — small (true dups + ~fp rate), so broadcastable.
-                # Join order matters at scale: history on the LEFT,
-                # the bounded positives BROADCAST on the right — the
-                # history hash column is scanned map-side and never
-                # shuffled (the other order plans a sort-merge semi
-                # that exchanges the full history column per publish)
-                seen_confirmed = existing.select("html_hash").join(
-                    F.broadcast(maybe_hashes), "html_hash", "left_semi"
-                )
-                incoming = incoming.join(
-                    F.broadcast(seen_confirmed), "html_hash", "left_anti"
-                )
-            if stats is not None:
-                stats["bloom_maybe_seen"] = n_maybe
-                stats["exact_join_skipped"] = n_maybe == 0
-        else:
-            # broadcast-semi rewrite of the anti-join (round-5): a
-            # LeftAnti against the history would sort-merge — i.e.
-            # SHUFFLE the full history hash column per publish, since
-            # only an anti-join's RIGHT side can broadcast and the
-            # history is the right side.  The batch is bounded (one
-            # crawl wave), so flip it: history ⋉ broadcast(batch keys)
-            # is a map-side filtered SCAN producing the batch-bounded
-            # seen set, which then broadcasts into the anti-join.
-            # Identical result set; the history column is scanned, never
-            # exchanged.  Measured (BENCH/scaling.json publishbloom
-            # cells): this is the dominant publish cost at every decade.
-            seen = existing.select("html_hash").join(
-                F.broadcast(incoming.select("html_hash")),
-                "html_hash",
-                "left_semi",
-            )
-            incoming = incoming.join(
-                F.broadcast(seen), "html_hash", "left_anti"
-            )
+        # broadcast-semi rewrite of the anti-join (round-5): a
+        # LeftAnti against the history would sort-merge — i.e.
+        # SHUFFLE the full history hash column per publish, since
+        # only an anti-join's RIGHT side can broadcast and the
+        # history is the right side.  The batch is bounded (one
+        # crawl wave), so flip it: history ⋉ broadcast(batch keys)
+        # is a map-side filtered SCAN producing the batch-bounded
+        # seen set, which then broadcasts into the anti-join.
+        # Identical result set; the history column is scanned, never
+        # exchanged.  Measured (BENCH/scaling.json publishbloom
+        # cells): this is the dominant publish cost at every decade.
+        seen = existing.select("html_hash").join(
+            F.broadcast(incoming.select("html_hash")),
+            "html_hash",
+            "left_semi",
+        )
+        incoming = incoming.join(
+            F.broadcast(seen), "html_hash", "left_anti"
+        )
         # prune the max-version aggregate to the batch's case_numbers
         # BEFORE aggregating: the key set is batch-bounded (broadcast
         # semi), so the history contributes a map-side filtered scan
@@ -262,35 +140,7 @@ def publish(
     # plan is garbage-collected
     out = out.localCheckpoint(eager=True)
 
-    def _save_state(new_state, event: str) -> None:
-        # record WHICH target head this state absorbed — the coherence
-        # gate above compares both fields next time
-        bloom_state.write(
-            new_state.coalesce(1),
-            {
-                "event": event,
-                "target_snap": target.latest(),
-                "target_path": getattr(target, "path", None),
-            },
-        )
-
     if out.isEmpty():
-        if bloom_state is not None and rebuilt:
-            # a rebuild happened but nothing inserted (the steady-state
-            # all-duplicate republish): persist the rebuilt state NOW —
-            # the target head is unchanged, so it is coherent — or the
-            # full-history rebuild repeats on every such publish
-            _save_state(state, "publish-rebuild")
         return out
     target.write(out, {"event": "publish"})
-    if bloom_state is not None:
-        # incremental maintenance: OR in bits for the inserted hashes
-        # only — O(batch) + O(n_buckets x n_bits/8) state, independent
-        # of history size (same contract as the frontier seen-filter)
-        new_state = bloom.update_state(
-            state, out.select("html_hash"), "html_hash",
-            bloom_buckets, bloom_bits,
-        )
-        _save_state(new_state, "publish")
     return out
-

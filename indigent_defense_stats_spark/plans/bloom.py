@@ -3,7 +3,9 @@
 The reference's content/URL-seen check is an exact lookup per row
 (updater/__init__.py:92-105).  At the 10^10-URL target a plain
 anti-join would shuffle the full seen set every wave; the north rule
-asks for a *partitioned bloom/cuckoo* filter instead.  Design:
+asks for a *partitioned* approximate filter instead.  The seen set is
+append-only (nothing is ever un-seen), so a Bloom filter is enough.
+Design:
 
 - the seen set is hash-bucketed by ``pmod(xxhash64(url), n_buckets)``;
 - each bucket keeps one Bloom bit-array (built/maintained per bucket
@@ -185,10 +187,11 @@ def prefilter_anti_join(
     n_buckets: int,
     probe_fn,
 ) -> DataFrame:
-    """Shared seen-filter composition (bloom and cuckoo both use it):
-    approximate pre-filter marks ``maybe_seen``; definite negatives
-    pass straight through (no false negatives by filter contract);
-    positives go to the exact anti-join.  ``probe_fn`` takes the
+    """Shared seen-filter composition (the fresh-build and the
+    persisted-state bloom probes both use it): the bloom pre-filter
+    marks ``maybe_seen``; definite negatives pass straight through (no
+    false negatives by filter contract); positives go to the exact
+    anti-join.  ``probe_fn`` takes the
     bucketed+hashed candidate frame and returns it + ``maybe_seen``."""
     cand = with_bucket_and_hashes(candidates, url_col, n_buckets)
     if seen is None or seen.isEmpty():

@@ -279,7 +279,6 @@ class CrawlEngine:
         priority: str = "reference",  # 'reference' | 'recency'
         robots_rules: dict[str, list[str]] | None = None,
         crawl_delay_ms: dict[str, int] | None = None,
-        seen_filter: str = "bloom",  # 'bloom' | 'cuckoo' (north rule)
         dust_rules: "DataFrame | None" = None,
         trap_blocklist: "DataFrame | None" = None,
         alias_noise: bool = False,
@@ -316,11 +315,9 @@ class CrawlEngine:
         # the reference parity path (pinned by pytest).
         self.rfc_normalize = rfc_normalize
         self.priority = priority
-        assert seen_filter in ("bloom", "cuckoo")
         # note: priority only matters under a per-wave budget — with
         # unlimited fan-out every pending row fetches this wave anyway
         assert priority in ("reference", "recency")
-        self.seen_filter = seen_filter
         t = lambda name, schema, mode: SnapshotTable(  # noqa: E731
             spark, os.path.join(base_dir, name), schema, mode
         )
@@ -689,8 +686,6 @@ class CrawlEngine:
         Spark job, no hashing.  Oversized deltas (> 64 MB) fall back
         to the distributed ``bloom.update_state`` job so the driver
         never materializes an unbounded wave."""
-        if self.seen_filter != "bloom":
-            return  # cuckoo path builds its own filter (test surface)
         d = self.frontier_t.adds_dir(snap)
         if d is None:
             return
@@ -1096,16 +1091,6 @@ class CrawlEngine:
         # positives only (true dups + fp rate).
         if self._seen_count <= self.bloom_threshold:
             return cand.join(seen, "canonical_url", "left_anti")
-        if self.seen_filter == "cuckoo":
-            from . import cuckoo
-
-            return cuckoo.filter_new(
-                cand,
-                seen,
-                "canonical_url",
-                self.n_buckets,
-                n_keys_hint=max(self._seen_count, 1),
-            )
         # probe the PERSISTED bloom state (maintained incrementally per
         # wave) — no O(seen) filter rebuild inside the wave's plan
         state = self.bloom_t.read()

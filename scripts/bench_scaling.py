@@ -120,41 +120,21 @@ JOBS = {
         "broadcast_ranks": False,
         "conf": {"spark.sql.adaptive.enabled": "false"},
     },
-    # round-5 publish-bloom crossover (verdict item 5): 40M-row
-    # published history, steady-state all-new publishes, plain
-    # anti-join vs sized bloom pre-pass through the real publish()
+    # steady-state publish cost at scale: a 40M- and a 160M-row
+    # published history, all-new batches through the real publish().
+    # The `publishbloom*_plain` names are kept so these cells merge
+    # with the round-5 records already in scaling.json.
     "publishbloom40m_plain": {
         "kind": "publishbloom",
         "n_history": 40_000_000,
         "n_publishes": 6,
         "batch_rows": 2_300,
-        "use_bloom": False,
     },
-    "publishbloom40m_bloom": {
-        "kind": "publishbloom",
-        "n_history": 40_000_000,
-        "n_publishes": 6,
-        "batch_rows": 2_300,
-        "use_bloom": True,
-    },
-    # one decade further: at 40M the bloom path's ~5 fixed jobs/publish
-    # still outweigh the avoided shuffle; both variable costs are
-    # linear in history with plain's slope ~25x steeper (33 B/key
-    # scanned+shuffled vs 1.25 B/key of state I/O), so the crossover
-    # sits between these two decades — measured, not extrapolated
     "publishbloom160m_plain": {
         "kind": "publishbloom",
         "n_history": 160_000_000,
         "n_publishes": 6,
         "batch_rows": 2_300,
-        "use_bloom": False,
-    },
-    "publishbloom160m_bloom": {
-        "kind": "publishbloom",
-        "n_history": 160_000_000,
-        "n_publishes": 6,
-        "batch_rows": 2_300,
-        "use_bloom": True,
     },
     # crawl8640 (~21M URLs): round-5 extension (verdict item 6) — one
     # more doubling past crawl4320 to locate the plateau of the
@@ -179,25 +159,12 @@ JOBS = {
     # in production the executor count scales with hosts, so linearity
     # HERE is the N->4N mechanism measured directly
     "politeness1016": {"kind": "politeness", "n_hosts": 1016},
-    # round-5 media-modality cell: the full REAL video chain (encode
-    # MJPEG-AVI -> idx1-verified demux -> native frame-sample filter ->
-    # baseline-JPEG frame decode) over generated docs — map-only, zero
-    # shuffle, so its N->4N ratio should track fetchparse's (the
-    # Python-boundary ceiling), evidencing the decode layer scales
-    "mediadecode": {"kind": "mediadecode", "n_docs": 100_000},
-    # decade-up variant: after the round-5 codec vectorization the
-    # 100k cell finishes in ~8 s at 32 cores and the fixed ~4-6 s of
-    # Python-worker spawn + stage setup dominates its ratios; 4x the
-    # docs amortizes the fixed cost so the cell measures the decode
-    # boundary again (same reasoning as the crawl4320 -> crawl8640
-    # doubling)
-    "mediadecode400k": {"kind": "mediadecode", "n_docs": 400_000},
     # round-5 dedup-join cell: the banded-LSH near-dup shape shared by
-    # the MinHash/SimHash/pHash/audio/video dedups — generated 64-bit
+    # the MinHash/SimHash/pHash dedups — generated 64-bit
     # signatures (native exprs, no decode), band explode, candidate
     # self-join, distinct, Hamming verify.  Measures the family's
     # linear-shuffle contract at volume, decoupled from the Python
-    # decode boundary (which mediadecode measures)
+    # decode boundary
     "lshband10m": {"kind": "lshband", "n_docs": 10_000_000},
     # decade-up variant (round-5 final): 4x the signatures so the
     # banding exchange dwarfs fixed costs — the volume trend of the
@@ -265,41 +232,6 @@ def job_fetchparse(spark, n_urls: int, n_hosts: int) -> dict:
     return {"urls": n_urls, "ok": n, "wall": round(wall, 1), "tput": round(n_urls / wall, 1)}
 
 
-def job_mediadecode(spark, n_docs: int) -> dict:
-    """REAL media decode scaling cell: the avi_frame_stats chain
-    (generate actual MJPEG-AVI bytes -> container demux with idx1
-    verification -> native frame_idx%2 sample filter -> real baseline-
-    JPEG decode of the sampled frames) over a GENERATED doc table.
-    Every stage is mapInPandas or a native filter — zero shuffle — so
-    this measures the Arrow/Python decode boundary, the same boundary
-    fetchparse measures for the crawl.  tput is sampled frames/s."""
-    import pyspark.sql.functions as F
-
-    from indigent_defense_stats_spark.operators import multimodal
-
-    docs = spark.range(n_docs).select(
-        F.col("id").cast("string").alias("doc_id"),
-        F.concat(F.lit("m://"), F.col("id").cast("string")).alias("media_ref"),
-        F.lit("mugshot").alias("media_kind"),
-    )
-    # CPU-per-row work, invisible to byte-based AQE coalescing
-    docs = docs.repartition(spark.sparkContext.defaultParallelism * 4)
-    payloads = multimodal.media_payloads_avi(docs)
-    frames = multimodal.avi_frame_table(payloads).filter(
-        F.col("frame_idx") % multimodal.AVI_SAMPLE_EVERY == 0
-    )
-    stats = multimodal.mjpeg_frame_stats(frames)
-    t0 = time.time()
-    n = stats.count()
-    wall = time.time() - t0
-    return {
-        "docs": n_docs,
-        "frames": n,
-        "wall": round(wall, 1),
-        "tput": round(n / wall, 1),
-    }
-
-
 def job_lshband(spark, n_docs: int, group_size: int = 10) -> dict:
     """Banded-LSH dedup join at volume: GENERATED 64-bit signatures
     (spark.range -> xxhash64 of the group id, one low-half bit flipped
@@ -307,7 +239,7 @@ def job_lshband(spark, n_docs: int, group_size: int = 10) -> dict:
     2x32-bit band explode, band-keyed candidate self-join, distinct,
     Hamming<=2 verify.  Everything JVM-native — this measures the
     shuffle shape every banded near-dup in the engine shares
-    (MinHash / SimHash / pHash / audio fingerprint / video signature),
+    (MinHash / SimHash / pHash),
     at a volume where the banding join dominates.  tput is docs/s;
     'pairs' sanity-pins the verified-pair count (45 per 10-doc group
     + rare cross-group collisions)."""
@@ -485,17 +417,14 @@ def job_lpaskew(
 
 
 def job_publishbloom(
-    spark, n_history: int, n_publishes: int, batch_rows: int, use_bloom: bool
+    spark, n_history: int, n_publishes: int, batch_rows: int
 ) -> dict:
-    """Publish-bloom crossover cell (round-5, verdict item 5): a
-    synthetic ``n_history``-row published history (unique md5 hashes),
-    then ``n_publishes`` steady-state all-new batches through the REAL
-    publish() — plain anti-join vs bloom pre-pass.  The bloom filter is
-    sized for capacity (64 buckets x 2^23 bits ≈ 13 bits/key at 40M
-    keys, fp ~0.3%), so most batches skip the exact join entirely and
-    the rare fp verifies by broadcast against a map-side history scan.
-    History build + warmup (bloom backfill) are OUTSIDE the timed
-    window — steady-state per-publish cost is the question.
+    """Steady-state publish cell: a synthetic ``n_history``-row
+    published history (unique md5 hashes), then ``n_publishes``
+    all-new batches through the REAL publish() (broadcast-semi
+    anti-join: the history hash column is scanned map-side, never
+    shuffled).  History build + warmup are OUTSIDE the timed window —
+    steady-state per-publish cost is the question.
     Metric: published rows/second over the timed publishes."""
     import shutil
     import tempfile
@@ -505,7 +434,6 @@ def job_publishbloom(
     from indigent_defense_stats_spark.operators import publish as P
     from indigent_defense_stats_spark.sources.catalog import SnapshotTable
 
-    buckets, bits = 64, 1 << 23
     base = tempfile.mkdtemp(prefix="pubbloom-")
     try:
         tgt = SnapshotTable(spark, f"{base}/target", mode="append")
@@ -517,11 +445,6 @@ def job_publishbloom(
             F.concat(F.lit("seed:"), F.col("id").cast("string")).alias("id"),
         )
         tgt.write(hist, {"event": "seed"})
-        bs = (
-            SnapshotTable(spark, f"{base}/bloom", mode="overwrite")
-            if use_bloom
-            else None
-        )
 
         def batch(i: int):
             return spark.range(batch_rows).select(
@@ -534,25 +457,19 @@ def job_publishbloom(
                 ).alias("html_hash"),
             )
 
-        kw = dict(bloom_buckets=buckets, bloom_bits=bits)
-        # warmup publish: backfills the bloom state from history (the
-        # one-time scan) — or, plain path, warms the codegen/scan caches
-        P.publish(batch(0), tgt, "01-01-2026", bloom_state=bs, **kw)
+        # warmup publish: warms the codegen/scan caches
+        P.publish(batch(0), tgt, "01-01-2026")
 
-        walls, skipped = [], 0
+        walls = []
         for i in range(1, n_publishes + 1):
-            st: dict = {}
             t0 = time.time()
-            P.publish(batch(i), tgt, "01-01-2026", bloom_state=bs, stats=st, **kw)
+            P.publish(batch(i), tgt, "01-01-2026")
             walls.append(round(time.time() - t0, 2))
-            skipped += bool(st.get("exact_join_skipped"))
         total = sum(walls)
         return {
             "history_rows": n_history,
             "batch_rows": batch_rows,
             "publishes": n_publishes,
-            "use_bloom": use_bloom,
-            "exact_join_skipped": skipped,
             "per_publish_walls": walls,
             "per_publish_mean": round(total / n_publishes, 2),
             "wall": round(total, 1),
@@ -591,8 +508,6 @@ def run_cell(job: str, cpus: int, args) -> dict:
     spark.range(1000).count()
     if cfg["kind"] == "fetchparse":
         res = job_fetchparse(spark, args.n_urls, n_hosts=N_COUNTIES)
-    elif cfg["kind"] == "mediadecode":
-        res = job_mediadecode(spark, cfg["n_docs"])
     elif cfg["kind"] == "lshband":
         res = job_lshband(spark, cfg["n_docs"])
     elif cfg["kind"] == "pagerank":
@@ -613,7 +528,6 @@ def run_cell(job: str, cpus: int, args) -> dict:
             cfg["n_history"],
             cfg["n_publishes"],
             cfg["batch_rows"],
-            cfg["use_bloom"],
         )
     elif cfg["kind"] == "politeness":
         from indigent_defense_stats_spark.plans import frontier as fr

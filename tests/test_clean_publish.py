@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from datetime import date, datetime
 
-import pyspark.sql.functions as F
 import pytest
 
 from indigent_defense_stats_spark import oracle, schemas, synth
@@ -209,142 +208,13 @@ def test_snapshot_changes_is_a_consistent_changelog(spark):
     assert {r["case_number"] for r in rows} == cases
 
 
-def test_publish_bloom_prepass_byte_identical(spark, world, tmp_path):
-    """Round-3 verdict item 4: the bloom-pre-passed publish must emit
-    EXACTLY the rows the plain anti-join publish emits, across a
-    multi-generation refresh; when a batch has zero bloom positives
-    the exact anti-join (and with it the history hash-column scan) is
-    skipped, and a batch of already-published hashes is still fully
-    suppressed via the exact verify of bloom positives (no false
-    negatives by filter contract, fp-rate irrelevant to output)."""
+def test_publish_rejects_overwrite_target_with_history(spark, world, tmp_path):
+    """A SECOND direct publish into an overwrite-mode target would
+    forget earlier hashes — contract violation (a fresh table's first
+    publish and read-only union adapters remain allowed)."""
     records, dim, dim_rows, expected_records = world
     cleaned = clean_mod.clean_records(records, dim, PDATE)
     today = "07-04-2024"
-
-    plain = SnapshotTable(spark, str(tmp_path / "plain"), mode="append")
-    boosted = SnapshotTable(spark, str(tmp_path / "boosted"), mode="append")
-    state = SnapshotTable(spark, str(tmp_path / "bloom"), mode="overwrite")
-
-    def key_set(rows):
-        return {(r["id"], r["version"], r["html_hash"]) for r in rows}
-
-    # generation 1: empty target, everything inserts
-    st1: dict = {}
-    ins_p = publish_mod.publish(cleaned, plain, today).collect()
-    ins_b = publish_mod.publish(
-        cleaned, boosted, today, bloom_state=state, stats=st1
-    ).collect()
-    assert key_set(ins_p) == key_set(ins_b)
-    assert state.read() is not None  # state seeded from the batch
-
-    # generation 2: same batch again -> bloom flags ALL rows maybe-seen
-    # (they are seen); exact verify suppresses every one
-    st2: dict = {}
-    again = publish_mod.publish(
-        cleaned, boosted, today, bloom_state=state, stats=st2
-    )
-    assert again.isEmpty()
-    assert st2["bloom_maybe_seen"] > 0 and not st2["exact_join_skipped"]
-
-    # generation 3: all-new content (hash rewrite) -> with 2^20 bits
-    # over this tiny batch the fp chance is ~0: the exact join is
-    # skipped and the output still matches the plain path
-    fresh = cleaned.withColumn(
-        "html_hash", F.concat(F.lit("gen3:"), cleaned.html_hash)
-    )
-    st3: dict = {}
-    ins_p3 = publish_mod.publish(fresh, plain, today).collect()
-    ins_b3 = publish_mod.publish(
-        fresh, boosted, today, bloom_state=state, stats=st3
-    ).collect()
-    assert key_set(ins_p3) == key_set(ins_b3)
-    assert st3["exact_join_skipped"] and st3["bloom_maybe_seen"] == 0
-
-    # generation 4: half old (gen-3 hashes), half new -> split path:
-    # old suppressed exactly, new inserted, outputs still equal
-    mixed = fresh.limit(2).unionByName(
-        fresh.withColumn(
-            "html_hash", F.concat(F.lit("gen4:"), fresh.html_hash)
-        )
-    )
-    st4: dict = {}
-    ins_p4 = publish_mod.publish(mixed, plain, today).collect()
-    ins_b4 = publish_mod.publish(
-        mixed, boosted, today, bloom_state=state, stats=st4
-    ).collect()
-    assert key_set(ins_p4) == key_set(ins_b4)
-    assert st4["bloom_maybe_seen"] >= 2  # the two republished hashes
-
-    # full-history equality after four generations
-    assert key_set(plain.read().collect()) == key_set(boosted.read().collect())
-
-
-def test_publish_bloom_coherence_gate(spark, world, tmp_path):
-    """A publish that bypasses bloom_state must NOT poison later
-    bloom-enabled publishes: the coherence gate (manifest target_snap
-    vs target head) detects the stale state, rebuilds from history,
-    and the republished batch is still fully suppressed."""
-    records, dim, dim_rows, expected_records = world
-    cleaned = clean_mod.clean_records(records, dim, PDATE)
-    today = "07-04-2024"
-    target = SnapshotTable(spark, str(tmp_path / "t"), mode="append")
-    state = SnapshotTable(spark, str(tmp_path / "bloom"), mode="overwrite")
-
-    # gen 1 through the bloom
-    st1: dict = {}
-    publish_mod.publish(cleaned, target, today, bloom_state=state, stats=st1)
-    assert st1["exact_join_skipped"] is False or st1["bloom_maybe_seen"] == 0
-    # gen 2 BYPASSES the bloom (different content)
-    fresh = cleaned.withColumn(
-        "html_hash", F.concat(F.lit("gen2:"), cleaned.html_hash)
-    )
-    assert not publish_mod.publish(fresh, target, today).isEmpty()
-    # gen 3 republishes gen-2 content WITH the (now stale) bloom: the
-    # gate must rebuild (bloom_rebuilt) and suppress every row — before
-    # the gate this silently re-inserted all of gen 2
-    st3: dict = {}
-    out = publish_mod.publish(
-        fresh, target, today, bloom_state=state, stats=st3
-    )
-    assert st3["bloom_rebuilt"] is True
-    assert out.isEmpty()
-    # the rebuilt state must persist even though nothing inserted —
-    # otherwise every later all-duplicate publish rescans full history
-    st3b: dict = {}
-    out2 = publish_mod.publish(
-        fresh, target, today, bloom_state=state, stats=st3b
-    )
-    assert out2.isEmpty()
-    assert st3b["bloom_rebuilt"] is False
-
-    # target-identity gate: a DIFFERENT target whose head happens to
-    # share the same snapshot number must not trust this bloom
-    other = SnapshotTable(spark, str(tmp_path / "other"), mode="append")
-    publish_mod.publish(cleaned, other, today)  # other head snap 1...
-    publish_mod.publish(fresh, other, today)  # ...then snap 2 = target's
-    assert other.latest() == target.latest()
-    sto: dict = {}
-    out3 = publish_mod.publish(
-        fresh, other, today, bloom_state=state, stats=sto
-    )
-    assert sto["bloom_rebuilt"] is True  # path mismatch -> rebuild
-    assert out3.isEmpty()
-
-    # first-generation stats contract: keys exist on an empty target
-    t2 = SnapshotTable(spark, str(tmp_path / "t2"), mode="append")
-    s2 = SnapshotTable(spark, str(tmp_path / "b2"), mode="overwrite")
-    st: dict = {}
-    publish_mod.publish(cleaned, t2, today, bloom_state=s2, stats=st)
-    assert {"bloom_maybe_seen", "exact_join_skipped", "bloom_rebuilt"} <= set(st)
-
-    # append-mode bloom_state is a contract violation
-    bad = SnapshotTable(spark, str(tmp_path / "b3"), mode="append")
-    with pytest.raises(ValueError, match="overwrite-mode"):
-        publish_mod.publish(cleaned, t2, today, bloom_state=bad)
-
-    # a SECOND direct publish into an overwrite-mode target would
-    # forget earlier hashes — contract violation (fresh first publish
-    # and read-only union adapters remain allowed)
     ow = SnapshotTable(spark, str(tmp_path / "ow"), mode="overwrite")
     publish_mod.publish(cleaned, ow, today)
     with pytest.raises(ValueError, match="append-mode"):

@@ -173,30 +173,6 @@ def test_resume_mid_frontier(spark, tmp_path, world):
         assert [u for h, u in ps if h == host] == log.host_sequence(host), host
 
 
-def test_cuckoo_seen_filter_equals_bloom_path(spark, tmp_path, world, engine):
-    """seen_filter='cuckoo' (the north rule's alternative) must yield
-    the identical seen set and document set as the bloom-path engine."""
-    reg, log = world
-    eng2 = CrawlEngine(
-        spark,
-        str(tmp_path),
-        reg,
-        START,
-        2,
-        n_buckets=4,
-        bloom_threshold=0,  # force the filter path every wave
-        seen_filter="cuckoo",
-    )
-    eng2.run()
-    assert eng2.seen_urls() == engine.seen_urls()
-    a = {r["doc_id"] for r in eng2.documents().collect()}
-    b = {r["doc_id"] for r in engine.documents().collect()}
-    assert a == b
-    assert {u for _, u in eng2.priority_sorted_log()} == {
-        f["url"] for f in log.fetches
-    }
-
-
 def test_recency_priority_fetches_newest_dates_first(spark, tmp_path):
     """priority='recency' (the north-star queue: case-date recency,
     then depth): with one fetch per host per wave, results pages must

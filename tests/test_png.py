@@ -13,6 +13,8 @@ Ground truths here:
   metadata and pixel statistics exactly (the DuckDB oracle replays the
   same sums at sf0.01 via check_oracles: png_decode_stats /
   png_resize_stats)
+- the same path rejects any other format (a RIFF/WAVE payload) with
+  a ValueError naming its magic
 """
 
 from __future__ import annotations
@@ -221,6 +223,32 @@ def test_decode_media_real_matches_grammar(png_payloads):
         w, h, ct, _ = _arith_pixels(d)
         assert (r["width"], r["height"], r["format"]) == (w, h, "png")
         assert r["n_bytes"] > 8
+
+
+def test_decode_media_real_rejects_riff_wave(spark):
+    # the real decoder reads PNG and baseline JPEG only: a PCM WAV
+    # payload must fail loudly with a ValueError naming its magic
+    # (quarantine, not crash), never decode or pass through
+    from pyspark.errors import PythonException
+
+    # canonical 44-byte-header PCM file: 1 channel, 8 kHz, 16-bit
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    data = struct.pack("<4h", 0, 1000, -1000, 0)
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    riff = b"RIFF" + struct.pack("<I", len(body)) + body
+    media = spark.createDataFrame(
+        [("1", "m://1", "document_image", riff)],
+        "doc_id string, media_ref string, media_kind string, content binary",
+    )
+    with pytest.raises(PythonException) as exc:
+        multimodal.decode_media(media, decoder="real").collect()
+    msg = str(exc.value)
+    assert "ValueError" in msg
+    assert "got magic b'RIFF'" in msg
 
 
 @pytestmark_data

@@ -169,32 +169,6 @@ BUDGETS = {
     "png_resize_stats": 0,
     # real JPEG codec chain: same two map-only stages, zero shuffle
     "jpeg_decode_stats": 0,
-    # real WAV codec chain: generate -> decode+stats, zero shuffle
-    "wav_decode_stats": 0,
-    # decode + windowed fold inside one mapInPandas, zero shuffle
-    "wav_energy_windows": 0,
-    # generate -> demux -> native sample filter -> frame decode:
-    # all map-only, zero shuffle
-    "avi_frame_stats": 0,
-    # one doc-keyed energy aggregate feeds the pinned signature table;
-    # banding/verify joins are broadcast-sized at test SF
-    "audio_fingerprint_neardup": 1,
-    # same shape: one doc-keyed cell aggregate -> pinned signature
-    "video_ahash_neardup": 1,
-    # ONE doc-keyed exchange shared by all window functions AND the
-    # final (doc_id, seg_id) aggregate (doc_id partitioning satisfies
-    # the superset grouping key — pinned here so a refactor that
-    # breaks the sharing shows up as a second Exchange)
-    "audio_vad_segments": 1,
-    # signature aggregate only; the transition fold is a plan-literal
-    # array expression
-    "video_shot_transitions": 1,
-    # map-only pairwise decode-diff -> one doc-keyed rollup
-    "video_frame_motion": 1,
-    # one doc-keyed exchange per modality chain (VAD cascade, shot
-    # rebuild reusing the signature aggregate's partitioning); the
-    # alignment join is broadcast-sized at test SF
-    "av_segment_alignment": 2,
     # per-round contributions live behind per-iteration checkpoints;
     # the returned plan is the final hubs x auths join
     "click_hits": 2,
@@ -218,7 +192,7 @@ BUDGETS = {
     # groupBy + the node left join) over the final star edge set
     "click_components": 4,
     # ONE doc_id exchange shared by the lag/lead smoothing window and
-    # the final per-doc aggregate (the audio_vad_segments pattern)
+    # the final per-doc aggregate
     "text_density_extract": 1,
 }
 
@@ -259,15 +233,6 @@ SCAN_BUDGETS = {
     "png_decode_stats": 1,  # one documents scan feeds the map chain
     "png_resize_stats": 1,
     "jpeg_decode_stats": 1,  # same map-only chain, JPEG codec
-    "wav_decode_stats": 1,  # same map-only chain, WAV codec
-    "wav_energy_windows": 1,
-    "avi_frame_stats": 1,  # one documents scan feeds demux + decode
-    "audio_fingerprint_neardup": 0,  # signature table pinned (3 consumers)
-    "video_ahash_neardup": 0,  # signature table pinned (3 consumers)
-    "audio_vad_segments": 1,  # one documents scan feeds the chain
-    "video_shot_transitions": 1,  # single consumer, no pin needed
-    "video_frame_motion": 1,  # single consumer, no pin needed
-    "av_segment_alignment": 2,  # one documents scan per modality side
     "text_density_extract": 1,  # span features fold over one scan
 }
 
