@@ -50,10 +50,9 @@ OPTIONAL = [
     "line_dedup",
     "unigram_lm_score",
     "bigram_lm_score",
-    # round-3 additions: interleaved-payload ops + iterative link-graph
+    # round-3 additions: interleaved-payload ops
     "media_caption_pairs",
     "pack_interleaved",
-    "click_pagerank",
     "mixture_sample",
     "dsir_select",
     "weighted_sample",
@@ -68,8 +67,7 @@ OPTIONAL = [
     "cms_heavy_hitters",
     "hll_distinct",
     "zorder_cells",
-    # Spark-4 SQL surfaces: recursive CTE (beam-bounded) + VARIANT
-    "click_reachability",
+    # Spark-4 SQL surface: VARIANT
     "variant_props_rollup",
     # CCNet head/middle/tail quality bucketing (ntile over LM scores)
     "ccnet_buckets",
@@ -85,17 +83,15 @@ OPTIONAL = [
     "balanced_shards",
     # session-9: model-based quality filter (map-only HOF scorer),
     # eTLD+1 rollup, perceptual-hash media near-dup (banding join),
-    # HyperBall centrality (iterative register merge), ExactSubstr
-    # removal (interval-union fold), RFC 3986 spec normalization
+    # ExactSubstr removal (interval-union fold), RFC 3986 spec
+    # normalization
     "quality_classifier_score",
     "registrable_domain_stats",
     "media_phash_neardup",
-    "hyperball_centrality",
     "exact_substr_cut",
     "rfc3986_canonical_urls",
     "hll_rolling_distinct",
     "hll_overlap_estimate",
-    "hyperball_neighborhood",
     "nfc_normalize_docs",
     "decontaminate_cut",
     "lsh_recall_report",
@@ -104,16 +100,12 @@ OPTIONAL = [
     "retention_cohorts",
     "rolling_zscore_anomalies",
     "range_partition_plan",
-    "clustering_coefficients",
     "schema_evolution_stats",
     "allocation_fairness",
     # round-4: real PNG decode (stdlib codec) over generated PNG bytes
     "png_decode_stats",
-    # round-4 session-10 families: winnowing overlap report (MOSS
-    # inverted-index join), HITS fixed point, synchronous LPA
+    # round-4: winnowing overlap report (MOSS inverted-index join)
     "winnow_matches",
-    "click_hits",
-    "click_communities_lpa",
     # round-5: real JPEG decode
     "jpeg_decode_stats",
     # round-5 coda: the end-to-end composition — crawled interleaved
@@ -299,17 +291,6 @@ def main() -> None:
         ):
             if k in effs:
                 headline_effs[k] = effs[k]
-        # iterative-join trend for the compact line (round-4 verdict
-        # item 6): edge-iterations/s of the shared graph loop at 20M
-        # edges, shuffle vs broadcast-rank path, pre-bandwidth-wall
-        # core levels — graded round-over-round
-        iterjoin = {
-            f"{c['job'].replace('pagerank20m', 'pr')}@{c['cpus']}": c["tput"]
-            for c in sc.get("cells", [])
-            if c["job"].startswith("pagerank20m") and c["cpus"] in (2, 8)
-        }
-        if iterjoin:
-            out["iterjoin_eps"] = iterjoin
     spark.stop()
 
     # --- grading interface (round-3 postmortem) ---------------------
@@ -342,8 +323,6 @@ def main() -> None:
     for k in ("crawl_urls_per_sec", "crawl_urls_per_sec_wave30"):
         if k in extra:
             compact[k] = extra[k]
-    if "iterjoin_eps" in out:
-        compact["iterjoin_eps"] = out["iterjoin_eps"]
     line = json.dumps(compact)
     if len(line) > 2000:  # hard backstop: never outgrow the tail window
         compact.pop("queries", None)

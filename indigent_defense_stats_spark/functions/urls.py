@@ -154,6 +154,17 @@ def rfc3986_normalize(url: str) -> str:
     return out
 
 
+def _let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` bound to the lambda variable ``v``.
+
+    A Column object used more than once in Python is inlined at every
+    use, so each reuse multiplies the expression tree Catalyst analyzes
+    and optimizes.  Binding it through a one-element ``transform``
+    keeps ``value`` in the tree once, however often ``body`` reads
+    ``v``."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def _pct_upper_col(s: Column) -> Column:
     parts = F.split(s, "%")
     rest = F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0)))
@@ -177,42 +188,82 @@ def remove_dot_segments_col(path: Column) -> Column:
     fold: '.' skips, '..' pops the last '/segment', anything else
     appends; a trailing '.'/'..' leaves the trailing slash the RFC
     algorithm produces."""
-    segs = F.split(path, "/")
-    rest = F.slice(segs, 2, F.greatest(F.size(segs) - 1, F.lit(0)))
-    acc = F.aggregate(
-        rest,
-        F.lit(""),
-        lambda a, s: F.when(s == ".", a)
-        .when(s == "..", F.regexp_replace(a, "/[^/]*$", ""))
-        .otherwise(F.concat(a, F.lit("/"), s)),
-    )
-    last = F.element_at(segs, -1)
-    return F.when(
-        last.isin(".", "..") & ~acc.endswith("/"), F.concat(acc, F.lit("/"))
-    ).otherwise(acc)
+
+    def fold(segs: Column) -> Column:
+        rest = F.slice(segs, 2, F.greatest(F.size(segs) - 1, F.lit(0)))
+        return F.aggregate(
+            rest,
+            F.lit(""),
+            lambda a, s: F.when(s == ".", a)
+            .when(s == "..", F.regexp_replace(a, "/[^/]*$", ""))
+            .otherwise(F.concat(a, F.lit("/"), s)),
+            lambda acc: F.when(
+                F.element_at(segs, -1).isin(".", "..") & ~acc.endswith("/"),
+                F.concat(acc, F.lit("/")),
+            ).otherwise(acc),
+        )
+
+    return _let(F.split(path, "/"), fold)
+
+
+# "scheme://authority" with the scheme's default port dropped; a group
+# that did not take part in the match is replaced by ""
+_DEFAULT_PORT_RE = "|".join(
+    f"^({sch}://.*){port}$" for sch, port in DEFAULT_PORTS.items()
+)
+_DEFAULT_PORT_SUB = "".join(f"${i}" for i in range(1, len(DEFAULT_PORTS) + 1))
 
 
 def rfc3986_normalize_col(url: Column) -> Column:
     """Spark column form of :func:`rfc3986_normalize` — pure JVM
     string/array expressions, zero Python in the hot path.  Same
     scope guard: references without an authority pass through
-    unchanged (see the Python mirror's docstring)."""
-    has_auth = F.regexp_extract(url, _SPLIT_RE, 3) != ""
-    scheme = F.lower(F.regexp_extract(url, _SPLIT_RE, 2))
-    auth = F.lower(F.regexp_extract(url, _SPLIT_RE, 4))
-    for sch, port in DEFAULT_PORTS.items():
-        auth = F.when(
-            (scheme == sch) & auth.endswith(port),
-            F.substring(auth, 1, F.length(auth) - len(port)),
-        ).otherwise(auth)
-    path = _pct_decode_unreserved_col(
-        _pct_upper_col(F.regexp_extract(url, _SPLIT_RE, 5))
-    )
-    path = remove_dot_segments_col(path)
-    path = F.when((auth != "") & (path == ""), F.lit("/")).otherwise(path)
-    query = _pct_decode_unreserved_col(
-        _pct_upper_col(F.regexp_extract(url, _SPLIT_RE, 7))
-    )
-    out = F.concat(scheme, F.lit("://"), auth, path)
-    out = F.when(query != "", F.concat(out, F.lit("?"), query)).otherwise(out)
-    return F.when(has_auth, out).otherwise(url)
+    unchanged (see the Python mirror's docstring).
+
+    The URL and each of its normalized parts appear once in the
+    expression tree (:func:`_let`), so the tree grows linearly with
+    its input."""
+
+    def normalize(u: Column) -> Column:
+        head = F.regexp_replace(
+            F.concat(
+                F.lower(F.regexp_extract(u, _SPLIT_RE, 2)),
+                F.lit("://"),
+                F.lower(F.regexp_extract(u, _SPLIT_RE, 4)),
+            ),
+            _DEFAULT_PORT_RE,
+            _DEFAULT_PORT_SUB,
+        )
+        path = remove_dot_segments_col(
+            _pct_decode_unreserved_col(
+                _pct_upper_col(F.regexp_extract(u, _SPLIT_RE, 5))
+            )
+        )
+        query = _pct_decode_unreserved_col(
+            _pct_upper_col(F.regexp_extract(u, _SPLIT_RE, 7))
+        )
+
+        def assemble(p: Column) -> Column:
+            # an empty authority leaves head ending in "://"
+            path = F.when(
+                (p["path"] == "") & ~p["head"].endswith("://"), F.lit("/")
+            ).otherwise(p["path"])
+            out = F.concat(p["head"], path)
+            return F.when(
+                p["query"] != "", F.concat(out, F.lit("?"), p["query"])
+            ).otherwise(out)
+
+        parts = F.struct(head.alias("head"), path.alias("path"), query.alias("query"))
+        return F.when(
+            F.regexp_extract(u, _SPLIT_RE, 3) != "", _let(parts, assemble)
+        ).otherwise(u)
+
+    return _let(url, normalize)
+
+
+def rfc3986_canonicalize_col(url: Column) -> Column:
+    """:func:`canonicalize_col` over :func:`rfc3986_normalize_col`, the
+    frontier key under ``rfc_normalize=True``.  canonicalize_col reads
+    its input about a dozen times, so the normalized URL is bound once
+    rather than inlined at each read."""
+    return _let(rfc3986_normalize_col(url), canonicalize_col)

@@ -25,7 +25,7 @@ rounds total vs O(chain-length) dependent fetch round-trips
 sequentially); hot canonical targets (every alias of a big portal
 points at the same URL) are a join-skew case AQE splits; lineage is
 truncated per round with ``localCheckpoint`` (the iterative idiom,
-same as graph.py / dedup.py components).
+same as dedup.py components).
 
 Synthetic redirect world (deterministic, from ``documents``; URL
 scheme shared with sources/sitemap.py so the two discovery channels

@@ -16,7 +16,7 @@ are classic map-reduce shapes and belong in the engine:
   (1 row), then a JVM higher-order fold rewrites the symbol arrays.
   The corpus is never touched again.  Per-round lineage is truncated
   with ``localCheckpoint`` (the iterative-algorithm idiom, same as
-  click_pagerank).
+  the dedup.py component loops).
 - ``bpe_segment_stats`` — segment the corpus with the learned merges
   and report per-source token accounting (words / chars / BPE
   tokens).  The apply side is the production-relevant direction at

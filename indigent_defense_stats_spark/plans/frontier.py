@@ -552,9 +552,9 @@ class CrawlEngine:
         spec normalizer (functions/urls.rfc3986_normalize_col) when
         ``rfc_normalize=True``."""
         if self.rfc_normalize:
-            from ..functions.urls import rfc3986_normalize_col
+            from ..functions.urls import rfc3986_canonicalize_col
 
-            url_expr = rfc3986_normalize_col(url_expr)
+            return rfc3986_canonicalize_col(url_expr)
         return canonicalize_col(url_expr)
 
     def seeds(self) -> DataFrame:

@@ -81,45 +81,6 @@ JOBS = {
     # one more doubling past crawl2160 to locate the plateau of the
     # rising-throughput trend (5637 -> 7165 -> 8813 URLs/s so far)
     "crawl4320": {"kind": "crawl", "n_days": 4320},
-    # iterative-join scaling (round-4): 5 PageRank rounds over a
-    # generated 20M-edge table — the batch-analytics counterpart of
-    # fetchparse (measures the per-round shuffle join + aggregate +
-    # checkpoint structure every iterative graph operator shares)
-    "pagerank20m": {"kind": "pagerank", "n_edges": 20_000_000},
-    # round-5: the broadcast-rank variant of the same cell (graph.
-    # pagerank_rounds broadcast_ranks=True) — the vertex side ships by
-    # broadcast, the 20M-edge table is never reshuffled inside a round,
-    # leaving one vertex-sized exchange per round (the contribution
-    # aggregate).  The paired cells measure exactly what the knob buys.
-    "pagerank20m_bcast": {
-        "kind": "pagerank",
-        "n_edges": 20_000_000,
-        "broadcast_ranks": True,
-    },
-    # round-5 skew-stress cells (verdict item 4): LPA over a uniform
-    # 5M-edge background + one 10^5-degree hub, three defenses compared
-    # (broadcast label join / AQE skew-split / neither).  label_mass
-    # must be identical across all three — the determinism contract
-    # under skew.
-    "lpaskew5m": {
-        "kind": "lpaskew",
-        "n_edges": 5_000_000,
-        "hub_degree": 100_000,
-        "broadcast_ranks": None,
-    },
-    "lpaskew5m_shuffle": {
-        "kind": "lpaskew",
-        "n_edges": 5_000_000,
-        "hub_degree": 100_000,
-        "broadcast_ranks": False,
-    },
-    "lpaskew5m_shuffle_noaqe": {
-        "kind": "lpaskew",
-        "n_edges": 5_000_000,
-        "hub_degree": 100_000,
-        "broadcast_ranks": False,
-        "conf": {"spark.sql.adaptive.enabled": "false"},
-    },
     # steady-state publish cost at scale: a 40M- and a 160M-row
     # published history, all-new batches through the real publish().
     # The `publishbloom*_plain` names are kept so these cells merge
@@ -291,131 +252,6 @@ def job_lshband(spark, n_docs: int, group_size: int = 10) -> dict:
     }
 
 
-def job_pagerank(spark, n_edges: int, broadcast_ranks: bool = False) -> dict:
-    """Iterative-join scaling cell: 5 fixed-point PageRank rounds over
-    a GENERATED uniform random edge table (spark.range — no driver
-    data), avg out-degree 16.  The click-graph analytics at test SF
-    are fixed-cost-bound (the whole graph fits one task), so THIS is
-    the cell that measures whether the per-round join+aggregate+
-    localCheckpoint structure scales with cores the way the operators'
-    docstrings claim.  Round-5: the rounds are the ACTUAL library loop
-    (graph.pagerank_rounds), so the cell measures operator code, and
-    ``broadcast_ranks`` selects the vertex-broadcast path — rank_mass
-    must be bit-identical across paths AND parallelism (the BIGINT
-    determinism contract).  Metric: edge-iterations per second
-    (edges x rounds / wall)."""
-    import pyspark.sql.functions as F
-
-    from indigent_defense_stats_spark.operators import graph
-
-    rounds = 5
-    n_nodes = max(n_edges // 16, 1)
-    raw = spark.range(n_edges).select(
-        F.pmod(F.xxhash64("id"), F.lit(n_nodes)).alias("src"),
-        F.pmod(F.xxhash64(F.col("id") + 1), F.lit(n_nodes)).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    edges = (
-        raw.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint(eager=False)
-    )
-    ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    ew = edges.join(ow, "src").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("page"))
-        .union(edges.select(F.col("dst").alias("page")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # materialize the graph OUTSIDE the timed window: the cell measures
-    # the iterative rounds (what every graph operator repeats), not the
-    # one-off build
-    n_ew = ew.count()
-    n = nodes.count()
-    t0 = time.time()
-    base = graph.SCALE // n
-    ranks = graph.pagerank_rounds(
-        nodes.select("page", F.lit(base).cast("bigint").alias("tp")),
-        ew,
-        n_nodes=n,
-        rounds=rounds,
-        broadcast_ranks=broadcast_ranks,
-    )
-    total = ranks.agg(F.sum("pr")).collect()[0][0]  # one bounded action
-    wall = time.time() - t0
-    return {
-        "edges": n_edges,
-        "weighted_edges": n_ew,
-        "nodes": n,
-        "rounds": rounds,
-        "broadcast_ranks": broadcast_ranks,
-        "rank_mass": int(total),
-        "wall": round(wall, 1),
-        "tput": round(n_edges * rounds / wall, 1),
-    }
-
-
-def job_lpaskew(
-    spark, n_edges: int, hub_degree: int, broadcast_ranks: bool | None
-) -> dict:
-    """Skew-stress cell (round-5, verdict item 4): synchronous LPA over
-    a power-law-ish graph — a uniform background PLUS one hub node of
-    degree ``hub_degree`` (node 0) — using the ACTUAL library loop
-    (graph.lpa_rounds).  The question the cell answers: does the hub
-    serialize a straggler task?  Three variants are benched:
-    auto/broadcast (the label join is map-side, skew never reaches a
-    shuffle), forced-shuffle with AQE (skew-join split), and
-    forced-shuffle with AQE OFF (the raw exposure).  label_mass is the
-    BIGINT sum of final labels — must be identical across all variants
-    and parallelism levels (determinism contract).
-    Metric: neighbor-row-iterations per second."""
-    import pyspark.sql.functions as F
-
-    from indigent_defense_stats_spark.operators import graph
-
-    rounds = 3
-    n_nodes = max(n_edges // 16, 2)
-    uni = spark.range(n_edges).select(
-        (F.pmod(F.xxhash64("id"), F.lit(n_nodes - 1)) + 1).alias("a"),
-        (F.pmod(F.xxhash64(F.col("id") + 1), F.lit(n_nodes - 1)) + 1).alias("b"),
-    )
-    # hub id = n_nodes (LARGEST id, not 0): min-label LPA floods the
-    # smallest id through a connected graph, so a hub at id 0 collapses
-    # label_mass to 0 and the determinism check degenerates — a max-id
-    # hub keeps the same join-key skew with a meaningful label sum
-    hub = spark.range(hub_degree).select(
-        F.lit(n_nodes).cast("bigint").alias("a"),
-        (F.pmod(F.xxhash64(F.col("id") + 2), F.lit(n_nodes - 1)) + 1).alias("b"),
-    )
-    und = (
-        uni.unionAll(hub)
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    nbr = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionAll(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=False)
-    )
-    # materialize the graph OUTSIDE the timed window; also record the
-    # realized hub degree so the skew is a measured fact, not a config
-    n_nbr = nbr.count()
-    hub_deg = nbr.filter(F.col("node") == n_nodes).count()
-    t0 = time.time()
-    labels = graph.lpa_rounds(nbr, rounds=rounds, broadcast_ranks=broadcast_ranks)
-    mass = labels.agg(F.sum("label")).collect()[0][0]
-    wall = time.time() - t0
-    return {
-        "nbr_rows": n_nbr,
-        "hub_degree": hub_deg,
-        "rounds": rounds,
-        "broadcast_ranks": broadcast_ranks,
-        "label_mass": int(mass),
-        "wall": round(wall, 1),
-        "tput": round(n_nbr * rounds / wall, 1),
-    }
-
-
 def job_publishbloom(
     spark, n_history: int, n_publishes: int, batch_rows: int
 ) -> dict:
@@ -510,18 +346,6 @@ def run_cell(job: str, cpus: int, args) -> dict:
         res = job_fetchparse(spark, args.n_urls, n_hosts=N_COUNTIES)
     elif cfg["kind"] == "lshband":
         res = job_lshband(spark, cfg["n_docs"])
-    elif cfg["kind"] == "pagerank":
-        res = job_pagerank(
-            spark, cfg["n_edges"],
-            broadcast_ranks=cfg.get("broadcast_ranks", False),
-        )
-    elif cfg["kind"] == "lpaskew":
-        res = job_lpaskew(
-            spark,
-            cfg["n_edges"],
-            cfg["hub_degree"],
-            cfg["broadcast_ranks"],
-        )
     elif cfg["kind"] == "publishbloom":
         res = job_publishbloom(
             spark,

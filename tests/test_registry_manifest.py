@@ -18,6 +18,13 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 
+# Fifth rotation (click-graph family deleted): its four prefix rows
+# (PageRank, reachability, HITS and components; #14-17) left the
+# registry, so the four relational queries the round-4 rotation demoted
+# return to the prefix at their module positions: dismissed_count_analog
+# (#3), primary_order_flag (#7), union_tagged (#9) and part_type_class
+# (#12).  All four have DuckDB oracles; none is in _TAIL any more.
+#
 # Fourth rotation (audio/video chain deleted): avi_frame_stats and
 # audio_fingerprint_neardup left the registry, so the two queries the
 # round-5 third rotation demoted for them return to the prefix:
@@ -31,8 +38,9 @@ import __spark_entry__ as entrymod
 # packing family's graded row; two rounds of driver-green history).
 #
 # The committed round-5 manifest: six round-4 families promoted
-# (winnow_matches, click_hits, click_components, collocation_topk,
-# jl_project_audit, png_decode_stats — the round-4 verdict's #1 item),
+# (winnow_matches, collocation_topk, jl_project_audit, png_decode_stats
+# and two since-deleted click-graph queries — the round-4 verdict's #1
+# item),
 # six demoted to the tail with pin comments (zorder_cells,
 # sitemap_frontier, hll_distinct, balanced_shards,
 # crawl_budget_waterfill, dust_rules — each keeps a pytest pin or a
@@ -43,21 +51,21 @@ import __spark_entry__ as entrymod
 PREFIX_MANIFEST = [
     "variant_props_rollup",
     "stats_orders",
+    "dismissed_count_analog",
     "region_revenue",
     "customers_without_big_orders",
     "event_sequence",
+    "primary_order_flag",
     "top_charge_argmin_analog",
+    "union_tagged",
     "denormalize_order_lines",
     "priority_severity_rollup",
+    "part_type_class",
     "doc_motion_flags",
     "user_events_reversed",
     "asof_attribution",
     "range_attribution",
     "funnel_stages",
-    "click_pagerank",
-    "click_reachability",
-    "click_hits",
-    "click_components",
     "cms_heavy_hitters",
     "gopher_quality_filters",
     "pii_scrub_docs",

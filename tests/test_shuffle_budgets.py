@@ -53,9 +53,6 @@ BUDGETS = {
     # register agg + per-type fold (2) + the exact countDistinct's
     # two-phase distinct (2); every shuffle is post-aggregate-sized
     "hll_distinct": 4,
-    # und/deg/orient each pinned (3 consumers each) — unpinned this
-    # plan exploded to 97 exchanges / 36 scans (measured)
-    "click_triangles": 4,
     # two-phase bottom-k (grp,pid then grp) + the exact baseline's
     # window/agg sharing one grp exchange; the 5-row est side joins
     # by broadcast
@@ -119,9 +116,6 @@ BUDGETS = {
     # banding self-join off the pinned phash table: the candidate
     # distinct is the single shuffle; verify joins broadcast
     "media_phash_neardup": 1,
-    # final plan only (rounds are eager checkpoints): four per-node
-    # ball aggregates joined on v — all post-aggregate-sized
-    "hyperball_centrality": 4,
     # gram count + df join-back + per-doc island window + island agg
     # + the struct-array join home — all linear in corpus grams
     "exact_substr_cut": 5,
@@ -135,8 +129,6 @@ BUDGETS = {
     # table, the exact distinct-pair baseline, and type-dim joins —
     # everything post-aggregate- or dim-sized
     "hll_overlap_estimate": 8,
-    # hyperball table + one global aggregate (single row)
-    "hyperball_neighborhood": 5,
     # NFC pass: one Arrow-batched map stage, zero shuffle
     "nfc_normalize_docs": 0,
     # eval grams arrive by BROADCAST (train side never shuffles on the
@@ -159,9 +151,6 @@ BUDGETS = {
     "schema_evolution_stats": 1,
     # waterfill's pinned dim windows + one global single-row aggregate
     "allocation_fairness": 1,
-    # oriented-triangle machinery (und/deg/orient pinned) + the
-    # per-corner explode aggregate + the degree join
-    "clustering_coefficients": 3,
     # real PNG codec chain: two map-only mapInPandas stages (generate
     # -> decode+stats), zero shuffle at any corpus size
     "png_decode_stats": 0,
@@ -169,14 +158,6 @@ BUDGETS = {
     "png_resize_stats": 0,
     # real JPEG codec chain: same two map-only stages, zero shuffle
     "jpeg_decode_stats": 0,
-    # per-round contributions live behind per-iteration checkpoints;
-    # the returned plan is the final hubs x auths join
-    "click_hits": 2,
-    # every LPA/PPR round is checkpointed — the returned plan is the
-    # final round's projection; a dropped pin re-inlines 4-5 rounds of
-    # join+agg lineage and these budgets catch it
-    "click_communities_lpa": 0,
-    "click_ppr_seeded": 0,
     # map-only HOF fingerprint construction + one doc_id aggregate
     "winnow_fingerprints": 1,
     # df-cap aggregate + posting join + pair aggregate (fp table
@@ -187,10 +168,6 @@ BUDGETS = {
     "collocation_topk": 1,
     # JL projection is map-only: plan-literal planes, no join, no agg
     "jl_project_audit": 0,
-    # star-contraction rounds converge behind checkpoints during
-    # construction; the returned plan is the root extraction (one
-    # groupBy + the node left join) over the final star edge set
-    "click_components": 4,
     # ONE doc_id exchange shared by the lag/lead smoothing window and
     # the final per-doc aggregate
     "text_density_extract": 1,
@@ -220,14 +197,10 @@ SCAN_BUDGETS = {
     "cdc_chunk_stats": 0,  # chunk-hash table pinned (df + join)
     "balanced_shards": 0,  # numbered table pinned (offset consistency)
     "bpe_merge_ranks": 0,  # local artifact table — no scan at all
-    "click_hits": 0,  # edge/node tables pinned; rounds checkpointed
-    "click_communities_lpa": 0,  # neighbor table pinned; rounds ckpt'd
-    "click_ppr_seeded": 0,  # edge/node tables pinned; rounds ckpt'd
     "winnow_fingerprints": 1,  # single map-only pass over documents
     "winnow_matches": 0,  # fingerprint posting table pinned
     "collocation_topk": 1,  # unigram table pinned (2 join consumers)
     "jl_project_audit": 1,  # one map-only pass over embeddings
-    "click_components": 0,  # edge set pinned per contraction round
     "bpe_segment_stats": 1,  # corpus scan; vocab side checkpointed
     "media_phash_neardup": 0,  # phash table pinned (3 consumers)
     "png_decode_stats": 1,  # one documents scan feeds the map chain

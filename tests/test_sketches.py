@@ -6,6 +6,8 @@ values are covered by scripts/check_oracles.py."""
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 
 from indigent_defense_stats_spark.operators import sketches
@@ -135,6 +137,16 @@ def test_hll_matches_pure_python_reference(spark, tmp_path):
         assert regs == want_regs, i
         assert row["hll_est"] == want_est, (i, row["hll_est"], want_est)
         assert row["exact_distinct"] == len(set(ids))
+
+
+def test_lc_table_is_m_ln_m_over_v():
+    # the shared literal table both engines read is m*ln(m/V)
+    for v in (1, 13, 63):
+        assert math.isclose(
+            sketches._HLL_LC[v - 1],
+            sketches.HLL_M * math.log(sketches.HLL_M / v),
+            rel_tol=1e-12,
+        )
 
 
 def test_hll_estimate_tracks_exact(spark):
