@@ -34,7 +34,6 @@ def entry(spark: SparkSession) -> DataFrame:
 def _modules():
     from indigent_defense_stats_spark.operators import (
         cdc,
-        corpusprep,
         crawl_queries,
         decontam,
         dedup,
@@ -46,7 +45,6 @@ def _modules():
         linkage,
         pipeline_queries,
         psl,
-        qualityclf,
         ranking,
         rfc3986,
         redirects,
@@ -57,7 +55,6 @@ def _modules():
         similarity,
         temporal,
         textstats,
-        tokenizer,
         unicodenorm,
         winnow,
     )
@@ -76,10 +73,8 @@ def _modules():
         sketches,
         sharding,
         textstats,
-        tokenizer,
         unicodenorm,
         winnow,
-        qualityclf,
         psl,
         rfc3986,
         ranking,
@@ -89,7 +84,6 @@ def _modules():
         ingestq,
         interleaved,
         similarity,
-        corpusprep,
         pipeline_queries,
         crawl_queries,
         zorder,
@@ -110,24 +104,13 @@ def _modules():
 # component (each one stays green locally via scripts/check_oracles.py
 # and pytest — see COVERAGE.md "driver evaluation prefix"), so the
 # 50-prefix covers every distinct surface: relational, window, crawl
-# analogs, dedup/ANN/decontam/corpus-prep, interleaved spans, media,
-# streaming, and the SQL-string API.
+# analogs, dedup/ANN/decontam, interleaved spans, media, streaming,
+# and the SQL-string API.
 _TAIL = [
-    # round-4 rotation: six session-7-9 families were promoted INTO the
-    # graded 50-prefix (bpe_merge_ranks, balanced_shards, dust_rules,
-    # crawl_budget_waterfill, hll_distinct, exact_substr_cut — all green
-    # under the local + hostile oracle sweeps since they landed); of
-    # the six moved to the tail in exchange, these two remain (their
-    # SURVEY.md §2 component keeps another green graded row or an exact
-    # pytest pin; the other four returned to the prefix when the
-    # click-graph family left the registry):
-    "nation_customer_stats",  # J2 broadcast-dim join: driver-covered by
-                              # cleaned_cases (eval'd, same UMich-shape
-                              # broadcast inner join + drop-on-miss)
-    "token_stats",            # textstats tokenization: the same
-                              # tokenizer machinery is eval'd via
-                              # gopher_quality_filters, unigram_lm_score
-                              # and ccnet_buckets
+    # round-4 rotation: the six queries it moved to the tail have all
+    # returned to the prefix (four when the click-graph family left the
+    # registry, nation_customer_stats and token_stats when the
+    # LM-pretraining corpus stage did)
     # variant-of-evaluated (evaluated sibling -> same component):
     "top5_orders",            # global ORDER BY + LIMIT family: the
                               # eval'd bm25_search returns the same
@@ -135,11 +118,6 @@ _TAIL = [
                               # top_charge_argmin_analog covers per-
                               # group ranking; slot given to the NEW
                               # XML surface (sitemap_frontier)
-    "corpus_interleave",      # corpus-mixing family: mixture_sample
-                              # (eval'd) covers the per-source window +
-                              # deterministic-order arithmetic; the
-                              # round-robin cycling law is pinned by
-                              # the corpus-prep property tests
     "ann_topk_cosine",        # exact ANN baseline: ann_topk_ivf_indexed
                               # (eval'd) replays the same fold dot
                               # products in its oracle and semantic_dedup
@@ -157,11 +135,6 @@ _TAIL = [
                               # per-group score distribution (ntile
                               # integer form); the approx_percentile
                               # t-digest contract stays pytest-pinned
-    "stratified_sample",      # sampling family: mixture_sample (eval'd)
-                              # runs the same per-group deterministic-
-                              # order cumulative windows against a
-                              # quota; count-quota law pinned by the
-                              # property tests + the threshold variant
     "incremental_dedup",      # composition of two evaluated pieces:
                               # the content-hash keeper join
                               # (clean_corpus, eval'd) + the LSH
@@ -207,8 +180,6 @@ _TAIL = [
                               # bucket-join dedup component
     "neardup_components_star",# same closure as neardup_components (eval'd);
                               # star-contraction algo pinned equal by pytest
-    "stratified_sample_threshold", # hash-threshold variant of
-                              # stratified_sample (eval'd)
     "media_resize_dims",      # media-plumbing family: media_features
                               # stays eval'd
     "media_dimensions",       # header-sniff constituent of the media
@@ -260,11 +231,6 @@ _TAIL = [
     "stream_exact_dedup",     # streaming form of exact_dedup_docs
                               # (eval'd); stream surface covered by
                               # session_windows (eval'd)
-    "weighted_sample",        # round-3 late addition (sampling family:
-                              # Efraimidis-Spirakis A-Res length-
-                              # weighted draw; stratified/threshold/
-                              # mixture samplers eval'd cover the
-                              # window+quota surface)
     "orc_roundtrip_stats",    # round-3 late addition (source-format
                               # family: ORC columnar round-trip with a
                               # full-column fidelity-hash oracle; the
@@ -289,12 +255,6 @@ _TAIL = [
                               # invariance are pytest-pinned and the
                               # full sample + interpolation replay is
                               # oracle-checked)
-    "dsir_select",            # round-3 late addition (data-selection
-                              # family: mixture_sample eval'd covers the
-                              # deterministic sampling surface; DSIR's
-                              # hashed-bigram importance weights are
-                              # oracle-checked via check_oracles +
-                              # property-tested)
     "bigram_lm_score",        # round-3 late addition (LM-scoring
                               # family: unigram_lm_score + ccnet_buckets
                               # eval'd cover the fit-broadcast-fold
@@ -324,13 +284,6 @@ _TAIL = [
                               # dust_rules — now eval'd in the prefix —
                               # with the map-only canonicalize family
                               # pinned by pytest)
-    "temperature_mixture_quota", # session-7 addition (mT5-style
-                              # temperature-rebalanced source quotas
-                              # via Hamilton largest-remainder; the
-                              # sampling/quota surface is eval'd via
-                              # mixture_sample, the bounded-dim window
-                              # via the waterfill pattern; sqrt-only
-                              # float contract, oracle-checked)
     "robots_path_matching",   # session-7 addition (full RFC 9309
                               # Allow/Disallow wildcard matching with
                               # longest-match precedence as a broadcast
@@ -369,24 +322,6 @@ _TAIL = [
                               # form, oracle-checked via a recursive-
                               # CTE chain re-walk + pytest cycle/cap
                               # cases)
-    "bpe_segment_stats",      # session-8 addition (tokenizer APPLY
-                              # side: learned merges rewrite the
-                              # bounded vocab, the corpus pays one
-                              # broadcast join + linear aggregate;
-                              # the TRAIN side bpe_merge_ranks is now
-                              # eval'd in the prefix; same
-                              # independent-replay oracle)
-    "quality_classifier_score", # session-9 addition (model-based
-                              # quality filtering: fastText-style
-                              # hashed unigram+bigram linear scorer,
-                              # the FineWeb-Edu/DCLM filter shape;
-                              # zero-shuffle map-only HOF surface is
-                              # eval'd via gopher_quality_filters /
-                              # unigram_lm_score, the md5-bucket
-                              # hashing-trick channel via
-                              # cms_heavy_hitters; integer micro-unit
-                              # weights -> exact BIGINT score, oracle-
-                              # checked via check_oracles + pytest)
     "registrable_domain_stats", # session-9 addition (eTLD+1 rollup
                               # via a baked public-suffix set with
                               # longest-suffix match — the host-
@@ -560,14 +495,8 @@ _TAIL = [
                               # mirror-collapse e2e pytest
     # round-5 rotation: jpeg_decode_stats (the new REAL lossy-format
     # decode surface, functions/jpeg.py) promoted INTO the graded
-    # prefix; demoted in exchange:
-    "pack_sequences",         # packing family: pack_interleaved stays
-                              # in the graded prefix (same per-shard
-                              # cumulative-window packing machinery,
-                              # multimodal variant); two rounds of
-                              # driver-green history (r3/r4 #39) and
-                              # the greedy-fill law stays pinned by
-                              # pytest + the local oracle sweep
+    # prefix; the text-only packing query it demoted in exchange has
+    # since left the registry with the LM-pretraining corpus stage
     # the four crawl_* entries are rows-only (no SQL oracle; the r2
     # harness skipped rows-only entries by design — sequential-oracle
     # pytest is their ground truth); text_density_extract, listed

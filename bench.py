@@ -53,9 +53,6 @@ OPTIONAL = [
     # round-3 additions: interleaved-payload ops
     "media_caption_pairs",
     "pack_interleaved",
-    "mixture_sample",
-    "dsir_select",
-    "weighted_sample",
     # round-3 temporal joins (as-of = single-shuffle window re-expression)
     "asof_attribution",
     "range_attribution",
@@ -75,17 +72,11 @@ OPTIONAL = [
     "dust_canonical_urls",
     "cdc_chunk_stats",
     "robots_path_matching",
-    "temperature_mixture_quota",
-    # session-8: distributed BPE tokenizer training + segmentation,
-    # sort-free global indexing + balanced output shards
-    "bpe_merge_ranks",
-    "bpe_segment_stats",
+    # session-8: sort-free global indexing + balanced shards
     "balanced_shards",
-    # session-9: model-based quality filter (map-only HOF scorer),
-    # eTLD+1 rollup, perceptual-hash media near-dup (banding join),
-    # ExactSubstr removal (interval-union fold), RFC 3986 spec
-    # normalization
-    "quality_classifier_score",
+    # session-9: eTLD+1 rollup, perceptual-hash media near-dup
+    # (banding join), ExactSubstr removal (interval-union fold),
+    # RFC 3986 spec normalization
     "registrable_domain_stats",
     "media_phash_neardup",
     "exact_substr_cut",

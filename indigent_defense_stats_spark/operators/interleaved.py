@@ -22,15 +22,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from .corpusprep import N_SHARDS, SEQ_BUDGET, _shuffle_key
-from .textstats import EN_STOP
+from .textstats import EN_STOP, md5_int
 
 CHUNK = 10  # tokens per text span
 MEDIA_EVERY = 3  # media span after every 3rd text span
+SEQ_BUDGET = 512  # tokens per packed sequence
+N_SHARDS = 8
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _shuffle_key() -> Column:
+    """Deterministic pseudo-random order key (seeded, portable)."""
+    return md5_int(F.concat(F.lit("shuf:"), F.col("doc_id").cast("string")))
 
 
 def _span_array() -> Column:
@@ -116,10 +122,9 @@ def spans_to_documents(crawl_docs: DataFrame) -> DataFrame:
     n_chars)``: text = the doc's text spans in offset order (media
     refs stay behind in the span table), source = the crawling
     county, case ids densified to longs by deterministic order.  The
-    bridge from the crawl engine's interleaved output to every corpus
-    operator in this package — used by scripts/run_pipeline.py's
-    corpus-prep stage and pinned end to end by
-    tests/test_pipeline_e2e.py."""
+    bridge from the crawl engine's interleaved output to the
+    ``documents``-shaped text operators in this package, pinned end
+    to end by tests/test_pipeline_e2e.py."""
     from pyspark.sql import Window
 
     text = F.array_join(
@@ -203,12 +208,12 @@ def media_caption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal sequence packing: like
-    :func:`corpusprep.pack_sequences`, but each document's cost is its
-    TEXT tokens plus ``IMG_TOKENS`` per media span (vision-language
-    trainers budget a fixed number of positions per image).  Documents
-    are packed greedily in deterministic shuffle-key order into
-    sequences of ``SEQ_BUDGET`` positions per shard.
+    """Multimodal sequence packing (the LM concat-and-chunk): each
+    document's cost is its TEXT tokens plus ``IMG_TOKENS`` per media
+    span (vision-language trainers budget a fixed number of positions
+    per image).  Documents are packed greedily in deterministic
+    shuffle-key order into sequences of ``SEQ_BUDGET`` positions per
+    shard.
 
     Scale shape: the cost is a per-row array fold over the span array
     (no explode); packing reuses the per-shard cumulative-sum window —
@@ -548,8 +553,7 @@ _SQL_SPANS = f"""
     FROM documents
 """
 
-# hash idiom kept in lockstep with corpusprep (same shuffle key)
-from .corpusprep import _SQL_H  # noqa: E402
+_SQL_H = "('0x' || left(md5('shuf:' || doc_id), 15))::BIGINT"
 
 ORACLE_SQL = {
     "media_caption_pairs": f"""

@@ -561,7 +561,7 @@ def rolling_week_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window (time-based, not row-count): for every
     event, how many events the same user produced in the trailing 7
     days including this one.  ``rangeBetween`` frames differ from the
-    ``rowsBetween`` frames used elsewhere (W1/W2, pack_sequences): the
+    ``rowsBetween`` frames used elsewhere (W1/W2, pack_interleaved): the
     frame is defined by the ORDER-BY VALUE distance, so ties share a
     frame and gaps shrink it — the rolling-metric semantics a
     monitoring pipeline needs.

@@ -1,4 +1,4 @@
-"""Deterministic global row indexing + size-balanced output sharding.
+"""Deterministic global row indexing + size-balanced shard assignment.
 
 At 100 TB the naive way to number rows globally — ``row_number()``
 over an unpartitioned window — is a single-task global sort: the one
@@ -32,18 +32,15 @@ On top of the index:
   ``ROWS_PER_SHARD`` and report per-shard row counts, key ranges, and
   an exact integer checksum.  (lineitem is NOT used: this testdata's
   (l_orderkey, l_linenumber) is not a unique key, and a non-unique
-  order key makes any global index nondeterministic.)  Every shard but the last is
-  exactly full — the property that keeps downstream training jobs
-  (sequence packing, shard-per-worker data loading) free of straggler
-  tasks.
-- ``write_balanced`` — materialize those shards as one parquet file
-  each (repartition on the shard id, then ``partitionBy`` so each
-  shard group lands in exactly one file).  At 100 TB balanced file
-  sizes are what keep the NEXT job's scan tasks uniform.
+  order key makes any global index nondeterministic.)  Every shard
+  but the last is exactly full — the property that keeps downstream
+  training jobs (sequence packing, shard-per-worker data loading) free
+  of straggler tasks.
 
 Reference analog: the scraper writes one JSON file per case in
-arrival order (reference src/scraper/__init__.py case loop); this is
-that sink generalized to a deterministic, evenly-cut global order.
+arrival order (reference src/scraper/__init__.py case loop); the shard
+assignment is that sink's cut generalized to a deterministic, evenly
+sized global order.
 """
 
 from __future__ import annotations
@@ -113,30 +110,6 @@ def balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("shard_id")
     )
-
-
-def write_balanced(
-    df: DataFrame,
-    path: str,
-    order_cols: Sequence[str],
-    rows_per_file: int = ROWS_PER_SHARD,
-) -> int:
-    """Write ``df`` as parquet with exactly ceil(n/rows_per_file)
-    equal-size files (last file takes the remainder): global index ->
-    contiguous file id -> one shuffle keyed by file id ->
-    ``partitionBy`` so each file group is written by exactly one task.
-    Returns the number of files written."""
-    idx = global_index(df, order_cols)
-    filed = idx.withColumn("_file", F.expr(f"idx DIV {int(rows_per_file)}"))
-    n = filed.count()
-    n_files = (n + rows_per_file - 1) // rows_per_file
-    (
-        filed.repartition(max(1, min(int(n_files), 1024)), "_file")
-        .write.mode("overwrite")
-        .partitionBy("_file")
-        .parquet(path)
-    )
-    return int(n_files)
 
 
 _ORACLE = f"""

@@ -73,13 +73,6 @@ def main() -> None:
         " documents, then re-crawl with both and report the fetch"
         " savings; the cured crawl feeds the rest of the pipeline",
     )
-    ap.add_argument(
-        "--corpus-prep",
-        action="store_true",
-        help="after analytics, lay the crawled docs out as a documents"
-        " corpus and run the training-data stage (Gopher filters,"
-        " composed clean-corpus keeper, LM sequence packing)",
-    )
     args = ap.parse_args()
 
     from indigent_defense_stats_spark import synth
@@ -310,83 +303,6 @@ def main() -> None:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.avg("days_elapsed"), 2).alias("avg_days_elapsed"),
     ).orderBy("attorney").show(truncate=False)
-
-    # ---- corpus prep (training-data layer, optional) ----------------------
-    if args.corpus_prep:
-        from indigent_defense_stats_spark.operators import (
-            corpusprep,
-            decontam,
-            textstats,
-        )
-        from indigent_defense_stats_spark.operators.interleaved import (
-            spans_to_documents,
-        )
-
-        corpus_dir = os.path.join(args.base_dir, "corpus")
-        spans_to_documents(docs).write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, "documents.parquet")
-        )
-        gof = textstats.gopher_quality_filters(spark, corpus_dir)
-        n_keep = gof.filter(F.col("keep")).count()
-        kept = decontam.clean_corpus(spark, corpus_dir)
-        packed = corpusprep.pack_sequences(spark, corpus_dir)
-        n_seqs = packed.select("shard", "seq_id").distinct().count()
-        print(
-            f"[corpus] docs={gof.count()} gopher_keep={n_keep} "
-            f"clean_corpus_keep={kept.count()} packed_seqs={n_seqs}"
-        )
-
-        # model-based quality filter (rule filters above, learned
-        # filter here — the FineWeb-Edu/DCLM stage order) + ExactSubstr
-        # duplicated-span removal on the crawl's own corpus
-        from indigent_defense_stats_spark.operators import qualityclf
-
-        clf = qualityclf.quality_classifier_score(spark, corpus_dir)
-        # one action for both numbers — the map-only scorer scans the
-        # whole corpus, so a separate filter().count() would run it twice
-        ctot = clf.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("keep").cast("long")).alias("k"),
-        ).head()
-        cut = decontam.exact_substr_cut(spark, corpus_dir)
-        ncut = cut.agg(
-            F.sum("n_cut").alias("c"), F.sum("n_tokens").alias("t")
-        ).head()
-        print(
-            f"[quality] classifier_keep={ctot['k']}/{ctot['n']} "
-            f"substr_cut_tokens={ncut['c']}/{ncut['t']}"
-        )
-
-        # tokenizer trained on the crawl's OWN corpus (the closed
-        # crawl -> corpus -> tokenizer loop), artifact persisted for
-        # the segmentation jobs downstream
-        from indigent_defense_stats_spark.operators import sharding, tokenizer
-
-        merges = tokenizer.bpe_merge_ranks(spark, corpus_dir)
-        merges.write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, "bpe_merges.parquet")
-        )
-        seg = tokenizer.bpe_segment_stats(spark, corpus_dir)
-        tot = seg.agg(
-            F.sum("n_chars").alias("c"), F.sum("n_tokens").alias("t")
-        ).head()
-        print(
-            f"[tokenizer] merges={merges.count()} corpus_chars={tot['c']} "
-            f"bpe_tokens={tot['t']}"
-        )
-
-        # size-balanced corpus shards: one parquet file per shard so
-        # the next job's scan tasks are uniform
-        corpus_docs = spark.read.parquet(
-            os.path.join(corpus_dir, "documents.parquet")
-        )
-        n_files = sharding.write_balanced(
-            corpus_docs,
-            os.path.join(corpus_dir, "shards"),
-            ["doc_id"],
-            rows_per_file=256,
-        )
-        print(f"[shards] files={n_files}")
 
     print(f"[done] total {time.time()-t0:.1f}s")
     spark.stop()

@@ -86,7 +86,7 @@ def test_pack_interleaved_cost_and_budget(spark):
     """Cost = text tokens + IMG_TOKENS per media span; within a shard,
     consecutive docs in (h, doc_id) order tile the position stream
     (cum_before is the running sum) and offset_in_seq < SEQ_BUDGET."""
-    from indigent_defense_stats_spark.operators.corpusprep import SEQ_BUDGET
+    from indigent_defense_stats_spark.operators.interleaved import SEQ_BUDGET
 
     recon = {
         r["doc_id"]: r

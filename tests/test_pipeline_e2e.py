@@ -1,12 +1,10 @@
-"""End-to-end: crawl output feeds the training-data layer unchanged.
+"""End-to-end: crawl output feeds the text-statistics and cleaning
+operators unchanged.
 
-The judge-facing claim is that a user of the reference could run their
-WHOLE workflow here — scrape Odyssey portals, then prepare the crawled
-corpus for training.  This suite proves the composition: the crawl
-engine's interleaved span table (plans/frontier.py, the input_hint
-shape) is reconstructed into the canonical ``documents`` schema and
-pushed through the REAL corpus operators (textstats / decontam /
-corpusprep) exactly as a user would point them at crawl output — no
+The crawl engine's interleaved span table (plans/frontier.py, the
+input_hint shape) is reconstructed into the canonical ``documents``
+schema and pushed through the REAL ``textstats`` and ``decontam``
+operators exactly as a user would point them at crawl output — no
 test-only shims, the same (spark, sf_dir) entrypoints the driver
 grades.
 """
@@ -15,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from indigent_defense_stats_spark.operators import corpusprep, decontam, textstats
+from indigent_defense_stats_spark.operators import decontam, textstats
 from indigent_defense_stats_spark.operators.crawl_queries import _engine
 from indigent_defense_stats_spark.operators.interleaved import spans_to_documents
 
@@ -23,8 +21,8 @@ from indigent_defense_stats_spark.operators.interleaved import spans_to_document
 @pytest.fixture(scope="module")
 def corpus_dir(spark, tmp_path_factory):
     """Crawl the synthetic portal world, then lay the crawled docs out
-    as a ``documents.parquet`` corpus via the shared span->documents
-    bridge (the same helper run_pipeline's corpus-prep stage uses)."""
+    as a ``documents.parquet`` corpus via the span->documents bridge
+    (``interleaved.spans_to_documents``)."""
     out = spans_to_documents(_engine(spark).documents())
     d = tmp_path_factory.mktemp("crawl-corpus")
     out.write.mode("overwrite").parquet(str(d / "documents.parquet"))
@@ -72,37 +70,3 @@ def test_clean_corpus_over_crawled_corpus(spark, corpus_dir):
     assert len(texts) == len(set(texts))
     again = {r["doc_id"] for r in decontam.clean_corpus(spark, corpus_dir).collect()}
     assert again == ids
-
-
-def test_pack_sequences_over_crawled_corpus(spark, corpus_dir):
-    """LM packing invariants on the crawled corpus: offsets live in
-    [0, SEQ_BUDGET); within each shard the (seq_id, offset) layout is
-    exactly the running token sum in (h, doc_id) order; every doc is
-    packed exactly once."""
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    out = corpusprep.pack_sequences(spark, corpus_dir)
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    assert len({r["doc_id"] for r in rows}) == len(rows)
-    b = corpusprep.SEQ_BUDGET
-    for r in rows:
-        assert 0 <= r["offset_in_seq"] < b, r
-    # recompute the running layout per shard from n_tokens
-    with_h = {
-        r["doc_id"]: r
-        for r in out.join(
-            docs.select(
-                "doc_id", corpusprep._shuffle_key().alias("h")
-            ),
-            "doc_id",
-        ).collect()
-    }
-    by_shard: dict = {}
-    for r in with_h.values():
-        by_shard.setdefault(r["shard"], []).append(r)
-    for shard_rows in by_shard.values():
-        cum = 0
-        for r in sorted(shard_rows, key=lambda x: (x["h"], x["doc_id"])):
-            assert r["seq_id"] == cum // b, r
-            assert r["offset_in_seq"] == cum % b, r
-            cum += r["n_tokens"]

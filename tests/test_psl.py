@@ -1,95 +1,14 @@
-"""Hashed-ngram quality classifier + eTLD+1 registrable-domain rollup:
-brute-force Python replays, adversarial shapes (single-token docs, the
-PSL miss path, a host that IS a public suffix), and the zero-shuffle
-plan contract for both map-only operators."""
+"""eTLD+1 registrable-domain rollup: a brute-force Python replay,
+adversarial shapes (the PSL miss path, a host that IS a public
+suffix), and the single-aggregate plan contract."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pyspark.sql.functions as F
 
 from indigent_defense_stats_spark.operators import psl as P
-from indigent_defense_stats_spark.operators import qualityclf as Q
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------------------
-# quality classifier
-# ---------------------------------------------------------------------------
-
-
-def _md5_int(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _w(bucket: int) -> int:
-    return ((bucket * 2654435761) % 2**31) % 2001 - 1000
-
-
-def _py_score(text: str) -> tuple[int, int]:
-    toks = text.lower().split(" ")
-    feats = [_w(_md5_int("u:" + t) % Q.CLF_B) for t in toks]
-    feats += [
-        _w(_md5_int(f"b:{a}_{b}") % Q.CLF_B)
-        for a, b in zip(toks, toks[1:])
-    ]
-    return len(feats), sum(feats) + Q._BIAS_MICRO
-
-
-def test_classifier_matches_pure_python(spark):
-    rows = (
-        Q.quality_classifier_score(spark, SF_DIR)
-        .join(
-            spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-                "doc_id", "text"
-            ),
-            "doc_id",
-        )
-        .collect()
-    )
-    assert rows
-    for r in rows[:50]:
-        n, s = _py_score(r["text"])
-        assert (r["n_feats"], r["score_micro"]) == (n, s), r["doc_id"]
-        assert r["keep"] == (s > 0)
-
-
-def test_classifier_single_token_and_empty(spark):
-    df = spark.createDataFrame(
-        [(1, "word"), (2, ""), (3, "a b")], "doc_id long, text string"
-    )
-    # substitute the reader bound into the qualityclf namespace
-    orig = Q._docs
-    try:
-        Q._docs = lambda spark, sf_dir: df
-        out = {
-            r["doc_id"]: r
-            for r in Q.quality_classifier_score(spark, SF_DIR).collect()
-        }
-    finally:
-        Q._docs = orig
-    # single token: 1 unigram, 0 bigrams
-    assert out[1]["n_feats"] == 1
-    # empty text tokenizes to [''] -> still 1 feature (never div-by-0)
-    assert out[2]["n_feats"] == 1
-    assert out[3]["n_feats"] == 3
-    for doc_id, text in [(1, "word"), (2, ""), (3, "a b")]:
-        n, s = _py_score(text)
-        assert (out[doc_id]["n_feats"], out[doc_id]["score_micro"]) == (n, s)
-
-
-def test_classifier_plan_is_map_only(spark):
-    plan = Q.quality_classifier_score(spark, SF_DIR)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-
-
-# ---------------------------------------------------------------------------
-# registrable domains
-# ---------------------------------------------------------------------------
 
 
 def _py_registrable(host: str) -> tuple[str | None, str | None]:

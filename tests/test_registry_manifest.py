@@ -18,6 +18,13 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 
+# Sixth rotation (LM-pretraining corpus stage deleted): its two prefix
+# rows (#24 BPE merge training, #40 mixture sampling) left the
+# registry, so the two queries still parked in _TAIL by the round-4
+# rotation return to the prefix at their module positions:
+# nation_customer_stats (#5) and token_stats (#20).  Both have DuckDB
+# oracles.
+#
 # Fifth rotation (click-graph family deleted): its four prefix rows
 # (PageRank, reachability, HITS and components; #14-17) left the
 # registry, so the four relational queries the round-4 rotation demoted
@@ -34,7 +41,8 @@ import __spark_entry__ as entrymod
 #
 # Round-5 second rotation: jpeg_decode_stats (the REAL baseline-JPEG
 # decode surface, functions/jpeg.py — new this round) promoted next to
-# its png sibling; pack_sequences demoted (pack_interleaved keeps the
+# its png sibling; the text-only packing query demoted (since deleted
+# with the LM-pretraining corpus stage; pack_interleaved keeps the
 # packing family's graded row; two rounds of driver-green history).
 #
 # The committed round-5 manifest: six round-4 families promoted
@@ -53,6 +61,7 @@ PREFIX_MANIFEST = [
     "stats_orders",
     "dismissed_count_analog",
     "region_revenue",
+    "nation_customer_stats",
     "customers_without_big_orders",
     "event_sequence",
     "primary_order_flag",
@@ -67,12 +76,12 @@ PREFIX_MANIFEST = [
     "range_attribution",
     "funnel_stages",
     "cms_heavy_hitters",
+    "token_stats",
     "gopher_quality_filters",
     "pii_scrub_docs",
     "unigram_lm_score",
     "ccnet_buckets",
     "collocation_topk",
-    "bpe_merge_ranks",
     "winnow_matches",
     "bm25_search",
     "benchmark_contamination",
@@ -88,7 +97,6 @@ PREFIX_MANIFEST = [
     "ann_topk_ivf_indexed",
     "semantic_dedup",
     "jl_project_audit",
-    "mixture_sample",
     "money_parse_total",
     "cleaned_cases",
     "publish_versions",

@@ -1,13 +1,11 @@
 """Global index + balanced-shard layout: the mid-decomposition pin,
-row_number equality, boundary independence, and the one-file-per-shard
-writer contract.  All ordering uses orders.o_orderkey — the testdata's
-lineitem (l_orderkey, l_linenumber) is NOT unique, which is exactly
-the nondeterminism global_index's unique-key precondition forbids."""
+row_number equality, boundary independence, shard sizes and the
+range-partition plan's balance.  All ordering uses orders.o_orderkey
+— the testdata's lineitem (l_orderkey, l_linenumber) is NOT unique,
+which is exactly the nondeterminism global_index's unique-key
+precondition forbids."""
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window
@@ -75,35 +73,6 @@ def test_balanced_shards_sizes(spark):
     # key ranges tile in order without overlap (o_orderkey unique)
     for prev, cur in zip(rows, rows[1:]):
         assert prev["last_orderkey"] < cur["first_orderkey"]
-
-
-def test_write_balanced_one_file_per_shard(spark, tmp_path):
-    o = _orders(spark)
-    n = o.count()
-    per = 256
-    out = str(tmp_path / "shards")
-    n_files = S.write_balanced(o, out, ["o_orderkey"], per)
-    assert n_files == (n + per - 1) // per
-    dirs = sorted(glob.glob(os.path.join(out, "_file=*")))
-    assert len(dirs) == n_files
-    for d in dirs:
-        files = [
-            f
-            for f in glob.glob(os.path.join(d, "*.parquet"))
-            if not f.endswith(".crc")
-        ]
-        assert len(files) == 1, d
-    # per-file row counts: all == per except the last remainder
-    counts = (
-        spark.read.parquet(out)
-        .groupBy("_file")
-        .count()
-        .orderBy("_file")
-        .collect()
-    )
-    for r in counts[:-1]:
-        assert r["count"] == per
-    assert counts[-1]["count"] == (n % per or per)
 
 
 def test_range_partition_plan_balance(spark):

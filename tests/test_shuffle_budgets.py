@@ -41,14 +41,11 @@ BUDGETS = {
     "q1_pricing_summary": 1,
     "exact_dedup_docs": 1,
     "asof_attribution": 1,
-    "pack_sequences": 1,
     "dedup_first_event": 1,
-    "weighted_sample": 1,  # one per-source window; keys are map-side
     # bounded multi-stage contracts
     "variant_props_rollup": 2,
     "line_dedup": 2,
     "minhash_lsh_neardup": 2,
-    "mixture_sample": 2,
     "cms_heavy_hitters": 4,
     # register agg + per-type fold (2) + the exact countDistinct's
     # two-phase distinct (2); every shuffle is post-aggregate-sized
@@ -91,9 +88,6 @@ BUDGETS = {
     # two-channel path distinct; the rule dim joins by broadcast and
     # matching is a pure map
     "robots_path_matching": 1,
-    # O(#sources) dim behind the checkpointed weight aggregate; the
-    # returned plan is windows on the pinned dim only
-    "temperature_mixture_quota": 0,
     # composite of the three hygiene miners over ONE pinned catalog:
     # base agg + trap aggs + the mining chain + two per-host joins,
     # all post-aggregate-sized
@@ -101,16 +95,6 @@ BUDGETS = {
     # numbered table arrives checkpointed (the offset-consistency
     # pin); what remains is the broadcast offset join + ONE shard agg
     "balanced_shards": 1,
-    # the RETURNED table is the o(1)-row training artifact; the
-    # trainer's shuffles (one corpus->vocab agg + per-round
-    # vocab-sized pair aggs) run behind bounded argmax collects
-    "bpe_merge_ranks": 0,
-    # (source, word) count + final per-source agg; the learned
-    # token-length vocab joins by BROADCAST off its checkpoint
-    "bpe_segment_stats": 2,
-    # map-only HOF scorer: weights are a closed-form expression, no
-    # vocabulary join, no shuffle at any corpus size
-    "quality_classifier_score": 0,
     # grouped agg + the n_hosts distinct's two-phase expansion
     "registrable_domain_stats": 2,
     # banding self-join off the pinned phash table: the candidate
@@ -188,20 +172,16 @@ SCAN_BUDGETS = {
     "embedding_neardup_lsh": 0,  # pinned projection only
     "semantic_dedup": 0,
     "minhash_lsh_neardup": 0,
-    "dsir_select": 0,  # exploded bucket table + per_doc both pinned
-    "weighted_sample": 1,
     "mirror_hosts": 0,  # posting table pinned
     "sitemap_frontier": 0,  # build-side row table pinned
     "dust_rules": 0,  # parsed catalog pinned (2 consumers)
     "dust_canonical_urls": 0,  # catalog pinned (mining + rewrite)
     "cdc_chunk_stats": 0,  # chunk-hash table pinned (df + join)
     "balanced_shards": 0,  # numbered table pinned (offset consistency)
-    "bpe_merge_ranks": 0,  # local artifact table — no scan at all
     "winnow_fingerprints": 1,  # single map-only pass over documents
     "winnow_matches": 0,  # fingerprint posting table pinned
     "collocation_topk": 1,  # unigram table pinned (2 join consumers)
     "jl_project_audit": 1,  # one map-only pass over embeddings
-    "bpe_segment_stats": 1,  # corpus scan; vocab side checkpointed
     "media_phash_neardup": 0,  # phash table pinned (3 consumers)
     "png_decode_stats": 1,  # one documents scan feeds the map chain
     "png_resize_stats": 1,
