@@ -20,8 +20,9 @@ its case links, which sort before the next results page — O5).  The
 fetch hash-partitions the wave by host into one task per core and
 sorts each partition by (host, priority); a ``mapInPandas`` loop then
 fetches each host's rows strictly sequentially in that order on one
-virtual clock, with politeness spacing carried across waves (host
-clock in ``host_state``), so:
+virtual clock, with politeness spacing carried across waves (each
+host's clock is checkpointed in ``host_state``; the clocks and the
+per-host intervals reach the fetch tasks in one broadcast per wave), so:
 
 - per-host fetch sequences sorted by priority == the reference's
   (dedup'd) sequential order, in every mode;
@@ -43,8 +44,9 @@ Scale notes: the frontier is a merge-on-read delta table
 (sources/catalog.py:DeltaTable — the plain-parquet analog of an
 Iceberg v2 table with equality deletes): a wave appends its
 discoveries and the keys it retired — O(wave) I/O — and a compaction
-folds deltas into a new base only when the dead fraction crosses a
-threshold, so frontier maintenance is amortized O(wave), never the
+folds deltas into a new base only when dead rows outnumber live ones
+and the retired keys have outgrown a broadcast anti-join, so frontier
+maintenance is amortized O(wave), never the
 O(frontier)-per-wave rewrite a copy-on-write snapshot would cost at
 10^10 URLs.  On a real cluster the same call sites are ``MERGE INTO``
 on an Iceberg table bucketed by ``pmod(xxhash64(canonical_url), N)``.
@@ -60,7 +62,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from datetime import date, timedelta
+from datetime import date
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -133,6 +135,8 @@ _PRIO_COLS = ["prio", "date_ord", "jo_ord", "link_ord", "canonical_url"]
 
 def _fetch_partition(
     max_retries: int,
+    politeness,
+    default_interval_ms: int,
     generation: int = 0,
     fetch_col: str = "canonical_url",
     alias_noise: bool = False,
@@ -146,30 +150,34 @@ def _fetch_partition(
     per-host sequential (helpers.py:93).  Everything around this
     function is columnar.
 
-    Each host's virtual clock starts at its ``clock_ms`` (carried from
-    the last wave) and lives in ``clocks`` for the whole partition, so
-    a host whose rows span several Arrow batches keeps one unbroken
-    clock.  The spacing interval is the host's ``interval_ms`` (the
-    robots.txt ``Crawl-delay`` where a host declares one, else the
-    reference-parity default).
+    ``politeness`` is the wave's broadcast ``(clocks, intervals)``, two
+    host -> ms dicts: the state crosses to the Python workers once per
+    wave instead of riding as joined columns on every row.  Each
+    host's virtual clock starts at its clock from the last wave (0 for
+    a host never fetched) and lives in ``clocks`` for the whole
+    partition, so a host whose rows span several Arrow batches keeps
+    one unbroken clock.  The spacing interval is the host's entry in
+    ``intervals`` (the AIMD interval, or the robots.txt
+    ``Crawl-delay`` where a host declares one), else
+    ``default_interval_ms`` (the reference-parity default).
     """
 
     def run(batches):
-        clocks: dict[str, int] = {}
+        start, intervals = politeness.value
+        clocks = dict(start)
         for pdf in batches:
             attempts, ts, payloads, spans_out, statuses = [], [], [], [], []
             # under DUST alias collapse the dedup key (canonical_url) is
             # a stripped form the origin server may not serve; the fetch
             # then targets the representative's pre-strip URL
             # (fetch_col='url')
-            for host, url, clock, interval in zip(
-                pdf["host"], pdf[fetch_col], pdf["clock_ms"], pdf["interval_ms"]
-            ):
-                clock = clocks.get(host, int(clock))
+            for host, url in zip(pdf["host"], pdf[fetch_col]):
+                clock = clocks.get(host, 0)
+                interval = intervals.get(host, default_interval_ms)
                 page = {"status": 503}
                 n = 0
                 for attempt in range(max_retries):
-                    clock += int(interval) * (attempt + 1)  # backoff incl. first
+                    clock += interval * (attempt + 1)  # backoff incl. first
                     page = synth.fetch(
                         url, attempt, generation, alias_noise, mirror_noise
                     )
@@ -188,7 +196,6 @@ def _fetch_partition(
                 spans = synth.extract_spans(html_doc) if html_doc is not None else None
                 payloads.append(json.dumps(page) if ok else None)
                 spans_out.append(json.dumps(spans) if spans is not None else None)
-            pdf = pdf.drop(columns=["clock_ms", "interval_ms"])
             pdf["status"] = statuses
             pdf["attempts"] = attempts
             pdf["fetch_ts_ms"] = ts
@@ -212,7 +219,9 @@ def _lineage_writer(eng: "CrawlEngine", wave: int, fetched: DataFrame, summary):
     """Fetch-log + per-partition lineage metrics writes (C6).
 
     Lineage is folded from the wave summary already on the driver — no
-    second cluster aggregation over the fetch output.  Both tables are
+    second cluster aggregation over the fetch output — and written
+    driver-side with pyarrow: at most (partitions x statuses) rows,
+    which a Spark write would move in a job of its own.  Both tables are
     write-only during the run (nothing the next wave reads), so the
     writes run on a background thread overlapped with the wave's tail
     and are joined before the wave ends — every snapshot exists when
@@ -239,23 +248,24 @@ def _lineage_writer(eng: "CrawlEngine", wave: int, fetched: DataFrame, summary):
             ).coalesce(eng.n_buckets),
             {"wave": wave},
         )
+        import pyarrow as pa
+
         lineage: dict[tuple[int, str], tuple[int, int]] = {}
         for r in summary:
             key = (r["partition_id"], r["status"])
             n0, a0 = lineage.get(key, (0, 0))
             lineage[key] = (n0 + r["n"], a0 + (r["attempts"] or 0))
-        eng.metrics_t.write(
-            eng.spark.createDataFrame(
-                pd.DataFrame(
-                    [
-                        (wave, pid, st, n, att)
-                        for (pid, st), (n, att) in sorted(lineage.items())
-                    ],
-                    columns=["wave", "partition_id", "status", "n", "attempts"],
-                ),
-                "wave int, partition_id int, status string,"
-                " n bigint, attempts bigint",
-            ).coalesce(1),
+        keys = sorted(lineage)
+        eng.metrics_t.write_local(
+            pa.table(
+                {
+                    "wave": pa.array([wave] * len(keys), pa.int32()),
+                    "partition_id": pa.array([p for p, _ in keys], pa.int32()),
+                    "status": pa.array([st for _, st in keys], pa.string()),
+                    "n": pa.array([lineage[k][0] for k in keys], pa.int64()),
+                    "attempts": pa.array([lineage[k][1] for k in keys], pa.int64()),
+                }
+            ),
             {"wave": wave},
         )
 
@@ -377,12 +387,6 @@ class CrawlEngine:
                 rows,
                 "host string, rules array<struct<rx:string,allow:boolean,prec:int>>",
             )
-        # per-host politeness interval: the robots.txt ``Crawl-delay``
-        # directive where a host declares one (the de-facto extension
-        # next to RFC 9309 allow/deny), else the reference-parity
-        # POLITENESS_MS.  A tiny O(#hosts) dimension broadcast onto the
-        # wave batch; the default map is empty so every existing crawl
-        # (and the ordering/URL-seen parity suite) is byte-identical.
         # crawl-hygiene hooks (operators/dust.py), both optional and
         # OFF by default so every existing crawl — and the reference-
         # ordering/URL-seen parity suite — is byte-identical:
@@ -422,20 +426,20 @@ class CrawlEngine:
                 .select("host", "path_template")
                 .distinct()
             )
+        # per-host politeness interval: the robots.txt ``Crawl-delay``
+        # directive where a host declares one (the de-facto extension
+        # next to RFC 9309 allow/deny), else the reference-parity
+        # POLITENESS_MS.  An O(#hosts) dict shipped to the fetch tasks
+        # in the wave's politeness broadcast; the default map is empty
+        # so every existing crawl (and the ordering/URL-seen parity
+        # suite) is byte-identical.
         self.crawl_delay_ms = {
             h: int(v) for h, v in (crawl_delay_ms or {}).items()
         }
         self._hosts = sorted(hosts)
-        self._intervals_df = spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    (h, self.crawl_delay_ms.get(h, politeness_ms))
-                    for h in self._hosts
-                ],
-                columns=["host", "interval_ms"],
-            ),
-            "host string, interval_ms int",
-        )
+        self._intervals = {
+            h: self.crawl_delay_ms.get(h, politeness_ms) for h in self._hosts
+        }
         # AIMD adaptive politeness (opt-in; default = the fixed
         # per-host interval above, reference parity): a host that
         # returned ANY 503 this wave (retries or a final failure)
@@ -445,22 +449,7 @@ class CrawlEngine:
         # replay from the fetch log on resume (no schema change).
         self.adaptive_politeness = adaptive_politeness
         self._aimd: dict[str, int] | None = None
-        # static dimensions, built once per engine (a createDataFrame
-        # from a Python list pays a pickled-row Python-worker round
-        # trip on *every* job that scans it — the Arrow/pandas path
-        # materializes a JVM local relation instead: measured 4.7s vs
-        # 0.2s per tiny write in this sandbox)
         self._counties_df = self._build_counties_df()
-        self._dates_df = spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    (d, (start_date + timedelta(days=d)).strftime("%m/%d/%Y"))
-                    for d in range(n_days)
-                ],
-                columns=["date_ord", "date_str"],
-            ),
-            "date_ord int, date_str string",
-        )
 
     # ------------------------------------------------------------------
     # wave-commit protocol: the wave's writes span six tables; a marker
@@ -641,6 +630,21 @@ class CrawlEngine:
         )
         self.host_state_t.write_local(t, {"wave": wave})
 
+    def _load_clocks(self) -> None:
+        """Host clocks from the latest ``host_state`` snapshot, read
+        driver-side with pyarrow like they were written (no Spark job);
+        empty on a fresh crawl."""
+        t = self.host_state_t.read_local()
+        self._clocks = (
+            {}
+            if t is None
+            else {
+                h: c
+                for h, c in zip(t["host"].to_pylist(), t["clock_ms"].to_pylist())
+                if h != "__none__"
+            }
+        )
+
     def _append_seen_from_adds(self, delta_snap: int, wave: int) -> None:
         """Seen-set append derived from the frontier delta's just-
         written adds files: the seen rows ARE the adds' canonical_urls,
@@ -794,43 +798,20 @@ class CrawlEngine:
         for w in sorted(by_wave):
             self._aimd_update(by_wave[w])
 
-    def _current_intervals_df(self) -> DataFrame:
+    def _current_intervals(self) -> dict[str, int]:
         if self._aimd is None:
-            return self._intervals_df
-        return self.spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    (h, self._aimd.get(h, self._aimd_base(h)))
-                    for h in self._hosts
-                ],
-                columns=["host", "interval_ms"],
-            ),
-            "host string, interval_ms int",
-        ).coalesce(1)
-
-    def _host_state_df(self) -> DataFrame:
-        # Arrow/pandas path + coalesce(1): O(#hosts) rows, one file,
-        # no Python-worker round trip per downstream job
-        return self.spark.createDataFrame(
-            pd.DataFrame(
-                list(self._clocks.items()) or [("__none__", 0)],
-                columns=["host", "clock_ms"],
-            ),
-            HOST_STATE,
-        ).coalesce(1)
+            return self._intervals
+        return {h: self._aimd.get(h, self._aimd_base(h)) for h in self._hosts}
 
     def _fetch(
         self, eligible: DataFrame, wave: int, generation: int = 0
     ) -> DataFrame:
-        hs = self._host_state_df()
-        batch = (
-            eligible.join(F.broadcast(hs), "host", "left")
-            .withColumn("clock_ms", F.coalesce(F.col("clock_ms"), F.lit(0)))
-            .join(F.broadcast(self._current_intervals_df()), "host", "left")
-            .withColumn(
-                "interval_ms",
-                F.coalesce(F.col("interval_ms"), F.lit(self.politeness_ms)),
-            )
+        # the host clocks and intervals as they stand now, shipped once
+        # to the fetch tasks; the caller destroys the broadcast when the
+        # wave ends (``self._politeness``), after the last job that may
+        # recompute the fetch
+        self._politeness = self.spark.sparkContext.broadcast(
+            (dict(self._clocks), self._current_intervals())
         )
         # One fetch task per core, each host's rows contiguous and in
         # priority order inside it.  Measured on 4 cores (254 hosts, 4
@@ -841,11 +822,13 @@ class CrawlEngine:
         # Arrow batch took a wave from ~220 Spark tasks to ~65 and the
         # crawl's pipeline run time down by ~29%.
         fetched = (
-            batch.repartition(self.spark.sparkContext.defaultParallelism, "host")
+            eligible.repartition(self.spark.sparkContext.defaultParallelism, "host")
             .sortWithinPartitions("host", *_PRIO_COLS)
             .mapInPandas(
                 _fetch_partition(
                     self.max_retries,
+                    self._politeness,
+                    self.politeness_ms,
                     generation,
                     # see _apply_hygiene: with dust/mirror collapse on,
                     # 'url' always holds the representative's pre-collapse
@@ -868,7 +851,6 @@ class CrawlEngine:
     def _expand(self, fetched: DataFrame, wave: int) -> DataFrame:
         """Discoveries -> candidate frontier rows (all native exprs)."""
         c = self.counties_df().select("county", "version", "portal")
-        dates_df = self._dates_df
 
         base = fetched.filter(F.col("status") == "fetched")
 
@@ -919,14 +901,25 @@ class CrawlEngine:
                 F.col("payload.search_id").alias("sid"),
                 F.posexplode("payload.jo_list").alias("jo_ord", "jo"),
             )
-            .crossJoin(F.broadcast(dates_df))
+            # one row per filing date as native exprs, not a cross join
+            # with a date dim (its broadcast is a Spark job per wave);
+            # slice keeps n_days=0 empty, where sequence(0, -1) is not
+            .withColumn(
+                "date_ord",
+                F.explode(
+                    F.slice(F.sequence(F.lit(0), F.lit(self.n_days)), 1, self.n_days)
+                ),
+            )
+            .withColumn(
+                "case_date", F.date_add(F.lit(self.start_date), F.col("date_ord"))
+            )
             .select(
                 F.concat(
                     "portal",
                     F.lit("Search.aspx?ID="),
                     F.col("sid").cast("string"),
                     F.lit("&DateFiled="),
-                    "date_str",
+                    F.date_format("case_date", "MM/dd/yyyy"),
                     F.lit("&JudicialOfficer="),
                     F.col("jo.id").cast("string"),
                 ).alias("url"),
@@ -938,7 +931,7 @@ class CrawlEngine:
                 "date_ord",
                 "jo_ord",
                 F.lit(-1).alias("link_ord"),
-                F.to_date("date_str", "MM/dd/yyyy").alias("case_date"),
+                "case_date",
             )
         )
 
@@ -1150,15 +1143,8 @@ class CrawlEngine:
         last = self._last_committed_wave()
         wave = (last if last is not None else -1) + 1
         # politeness clocks: in-memory during the run, checkpointed per
-        # wave, reloaded on resume (skip the collect entirely on a
-        # fresh crawl — no snapshot, no job)
-        self._clocks = {}
-        if self.host_state_t.latest() is not None:
-            self._clocks = {
-                r["host"]: r["clock_ms"]
-                for r in self.host_state_t.read().collect()
-                if r["host"] != "__none__"
-            }
+        # wave, reloaded on resume
+        self._load_clocks()
         self._seen_count = self.seen_t.rowcount()  # footer metadata, no job
         if self.adaptive_politeness:
             self._aimd_replay()  # deterministic from the fetch log
@@ -1174,7 +1160,10 @@ class CrawlEngine:
             # — the table holds pending rows only
             pending = self.frontier_t.read()
             mark("read")
-            eligible = self._eligible(pending).cache()
+            # only the fetch output is cached: the retired keys are read
+            # back from it, so the eligible set needs no cache (and no
+            # job of its own to build one)
+            eligible = self._eligible(pending)
             fetched = self._fetch(eligible, wave).cache()
             try:
                 # ONE action materializes the cache and yields wave stats,
@@ -1250,7 +1239,8 @@ class CrawlEngine:
 
                 # frontier state transition as an O(wave) delta: the
                 # wave's eligible keys are retired (every eligible row
-                # came back fetched or failed) and the deduped
+                # came back fetched or failed, so they are the fetch
+                # output's keys) and the deduped
                 # discoveries are appended — the full pending set is
                 # never rewritten (VERDICT r1 item 3).  The write IS the
                 # materialization: n_new comes from the written parquet
@@ -1266,17 +1256,20 @@ class CrawlEngine:
                 )
                 delta_snap = self.frontier_t.write_delta(
                     adds=adds_hashed.coalesce(self.n_buckets),
-                    removes=eligible.select("canonical_url").coalesce(1),
+                    removes=fetched.select("canonical_url").coalesce(1),
                     meta={"wave": wave},
                     n_removes=n_removed,
                     pool=self._pool,
                 )
                 n_new = self.frontier_t.adds_rowcount(delta_snap)
                 # amortized compaction: fold deltas into a new base once
-                # dead rows outnumber live ones, so merge-on-read cost
-                # stays bounded while per-wave write cost stays O(wave)
+                # dead rows outnumber live ones and the dead set is too
+                # big for a broadcast anti-join, so merge-on-read cost
+                # stays bounded while per-wave write cost stays O(wave);
+                # a drained frontier is never compacted
+                # (DeltaTable.compaction_pays)
                 n_after = n_pending + n_new - n_removed
-                if self.frontier_t.removes_outstanding() > max(n_after, 256):
+                if self.frontier_t.compaction_pays(n_after):
                     self.frontier_t.compact({"wave": wave, "event": "compact"})
                 mark("frontier write")
                 bloom_future = None
@@ -1307,8 +1300,8 @@ class CrawlEngine:
                 mark("log+metrics+docs join")
                 self._commit_wave(wave)
             finally:
-                eligible.unpersist()
                 fetched.unpersist()
+                self._politeness.destroy()
             n_pending += n_new - n_fetched - n_failed
             wave += 1
         return stats
@@ -1348,13 +1341,7 @@ class CrawlEngine:
         last = self._last_committed_wave()
         wave = (last if last is not None else -1) + 1
         if not getattr(self, "_clocks", None):
-            self._clocks = {}
-            if self.host_state_t.latest() is not None:
-                self._clocks = {
-                    r["host"]: r["clock_ms"]
-                    for r in self.host_state_t.read().collect()
-                    if r["host"] != "__none__"
-                }
+            self._load_clocks()
         seeds = (
             self.log_t.read()
             .filter((F.col("depth") == 4) & (F.col("status") == "fetched"))
@@ -1437,6 +1424,7 @@ class CrawlEngine:
             self._commit_wave(wave)
         finally:
             fetched.unpersist()
+            self._politeness.destroy()
         return docs
 
     # ------------------------------------------------------------------

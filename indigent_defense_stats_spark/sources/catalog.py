@@ -146,15 +146,31 @@ class SnapshotTable:
         if self.mode == "overwrite":
             if upto not in snaps:
                 return None
-            return self.spark.read.parquet(
-                os.path.join(self._snap_dir(upto), "data")
-            )
-        paths = [
-            os.path.join(self._snap_dir(s), "data") for s in snaps if s <= upto
-        ]
+            paths = [os.path.join(self._snap_dir(upto), "data")]
+        else:
+            paths = [
+                os.path.join(self._snap_dir(s), "data") for s in snaps if s <= upto
+            ]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        # a declared schema spares the one-task parquet footer job that
+        # schema inference runs on every read
+        reader = self.spark.read
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        return reader.parquet(*paths)
+
+    def read_local(self):
+        """Driver-side read of the latest snapshot as a pyarrow Table,
+        the counterpart of :meth:`write_local` for driver-sized
+        overwrite tables: NO Spark job.  None when there is none."""
+        import pyarrow.parquet as pq
+
+        assert self.mode == "overwrite"
+        snap = self.latest()
+        if snap is None:
+            return None
+        return pq.read_table(os.path.join(self._snap_dir(snap), "data"))
 
     def read_or_empty(self, snapshot: int | None = None) -> DataFrame:
         df = self.read(snapshot)
@@ -209,9 +225,15 @@ class DeltaTable:
     - ``read()`` is ``(base ∪ adds*) ⟕anti removes*`` — the anti-join
       is the merge-on-read; AQE broadcasts the removes side while it
       is small;
-    - ``compact()`` folds accumulated deltas into a fresh base when
-      the remove set grows past a threshold (the caller's policy), so
-      read cost is amortized O(pending);
+    - ``compact()`` folds accumulated deltas into a fresh base;
+      ``compaction_pays(n_live)`` is the policy: the table is not
+      drained, dead rows outnumber live ones, and the remove files
+      have outgrown ``spark.sql.autoBroadcastJoinThreshold``, so the
+      anti-join would no longer be a broadcast.  Below that size the
+      merge-on-read costs one small broadcast per read, and a
+      compaction (a full read and rewrite of the live set) would cost
+      more than it saves; above it, read cost is amortized
+      O(pending);
     - snapshots carry the same manifest/wave tags as
       :class:`SnapshotTable`, so the wave-commit rollback protocol
       (drop snapshots beyond the last commit marker) applies
@@ -379,23 +401,18 @@ class DeltaTable:
         adds, removes = self._live_paths()
         if not adds:
             return None
-        # project to the declared schema: writers may attach auxiliary
-        # columns to the adds files (e.g. precomputed bloom hashes);
-        # parquet column pruning means they are never even scanned here
-        df = self.spark.read.parquet(*adds).select(
-            *[f.name for f in self.schema.fields]
-        )
+        # read with the declared schema: no footer-inference job, and
+        # auxiliary columns writers attach to the adds files (e.g.
+        # precomputed bloom hashes) are never even scanned
+        df = self.spark.read.schema(self.schema).parquet(*adds)
         if removes:
             # explicit one-column schema: remove files may carry extra
-            # null columns (combined-write layout) or only the key
+            # null columns (combined-write layout) or only the key.  No
+            # distinct: duplicate keys cannot change a left anti-join
             key_schema = StructType(
                 [f for f in self.schema.fields if f.name == self.key]
             )
-            rem = (
-                self.spark.read.schema(key_schema)
-                .parquet(*removes)
-                .distinct()
-            )
+            rem = self.spark.read.schema(key_schema).parquet(*removes)
             df = df.join(rem, self.key, "left_anti")
         return df
 
@@ -441,6 +458,19 @@ class DeltaTable:
         return total
 
     # -- maintenance ---------------------------------------------------
+    def compaction_pays(self, n_live: int) -> bool:
+        """Compaction policy (see the class docstring): never for a
+        drained table, never while dead rows are a minority, and never
+        while the remove files are small enough to broadcast.  Their
+        on-disk bytes are the size the planner weighs for that choice;
+        a negative threshold disables broadcasts, so then any dead
+        majority compacts."""
+        if n_live <= 0 or self.removes_outstanding() <= n_live:
+            return False
+        removes_bytes = sum(parquet_dir_bytes(r) for r in self._live_paths()[1])
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return removes_bytes > conf.autoBroadcastJoinThreshold()
+
     def compact(self, meta: dict | None = None) -> int | None:
         """Fold base+deltas into a fresh base snapshot.  Old snapshots
         are NOT removed here — until the new base is covered by a

@@ -113,12 +113,12 @@ def test_override_preserves_order_and_seen(engine, world):
 
 def test_intervals_dimension_defaults(spark, tmp_path, world):
     """Without overrides every host's interval is POLITENESS_MS — the
-    dimension join is an exact no-op vs the pre-feature engine."""
+    per-host interval map is an exact no-op vs the pre-feature engine."""
     reg, _ = world
     eng = CrawlEngine(spark, str(tmp_path), reg, START, 1, n_buckets=2)
-    rows = eng._intervals_df.collect()
+    rows = list(eng._intervals.values())
     assert len(rows) == 2
-    assert all(r["interval_ms"] == POLITENESS_MS for r in rows)
+    assert all(r == POLITENESS_MS for r in rows)
 
 
 def _paced_run(politeness_ms: int, delays: dict[int, int], urls_per_host: int):

@@ -196,7 +196,7 @@ def test_engine_accepts_compiled_rules(spark, tmp_path):
         robots_rules=rules,
         crawl_delay_ms=delays,
     )
-    iv = {r["host"]: r["interval_ms"] for r in eng._intervals_df.collect()}
+    iv = eng._intervals
     assert iv == {h0: 1000, h1: POLITENESS_MS}
 
 
