@@ -172,9 +172,10 @@ def regex_extract_spans(html: str) -> list[dict]:
     """Independent recovery of the span sequence from the HTML wire
     format — a regex scan over ``td.ssp`` text cells and ``a.ssm``
     media anchors, deliberately sharing NO code with the engine's
-    ``synth.extract_spans`` (html.parser walk), so the span-sequence
-    equality tests compare two independent readers of the same wire
-    format and a bug in either extractor surfaces as a mismatch."""
+    ``synth.extract_spans`` (``str.find`` marker scan), so the
+    span-sequence equality tests compare two independent readers of
+    the same wire format and a bug in either extractor surfaces as a
+    mismatch."""
     global _SPAN_RE
     import html as _h
     import re

@@ -515,10 +515,13 @@ def case_spans(
 # them with BeautifulSoup (parser/__init__.py:225;
 # resources/test_files/test_123456.html).  The synthetic portal does
 # the same: ``fetch`` returns a rendered HTML page for case URLs and
-# the engine/oracle recover the span sequence with
-# :func:`extract_spans`.  Handing pre-parsed spans over the wire (the
-# previous design) made the per-URL cost unrealistically near-zero,
-# which misrepresents where crawl CPU goes at scale.
+# the engine recovers the span sequence with :func:`extract_spans`
+# (the oracle with its own ``oracle.regex_extract_spans``).  Pages
+# keep a representative size (~42 KB, mostly boilerplate), so
+# rendering, moving and storing them cost what a real page does;
+# handing pre-parsed spans over the wire (an earlier design) hid that
+# cost.  Extraction itself is a marker scan that reads only the ~37
+# span cells the engine keeps, not a walk over every tag.
 #
 # Round-trip contract (tested):
 #   extract_spans(render_case_html(case_spans(i, cid))) == case_spans(i, cid)
@@ -596,60 +599,67 @@ def render_case_html(spans: list[dict]) -> str:
     return "".join(parts)
 
 
-class _SpanExtractor:
-    """html.parser-based recovery of the span sequence (the engine's
-    equivalent of the reference's BeautifulSoup pass)."""
-
-    def __init__(self) -> None:
-        from html.parser import HTMLParser
-
-        outer = self
-
-        class P(HTMLParser):
-            def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
-                if tag == "td" and a.get("class") == "ssp":
-                    outer._buf = []
-                elif tag == "a" and a.get("class") == "ssm":
-                    outer.spans.append(
-                        {"kind": "media", "text": "", "media_ref": a.get("href", "")}
-                    )
-
-            def handle_endtag(self, tag):
-                if tag == "td" and outer._buf is not None:
-                    outer.spans.append(
-                        {
-                            "kind": "text",
-                            "text": "".join(outer._buf),
-                            "media_ref": "",
-                        }
-                    )
-                    outer._buf = None
-
-            def handle_data(self, data):
-                if outer._buf is not None:
-                    outer._buf.append(data)
-
-        self._p = P(convert_charrefs=True)
-        self.spans: list[dict] = []
-        self._buf: list[str] | None = None
-
-    def feed(self, html: str) -> list[dict]:
-        self._p.feed(html)
-        self._p.close()
-        for off, s in enumerate(self.spans):
-            s["offset"] = off
-        return self.spans
+_TEXT_OPEN = '<td class="ssp">'
+_MEDIA_OPEN = '<a class="ssm" href="'
 
 
 def extract_spans(html: str) -> list[dict]:
     """HTML page -> interleaved span sequence (kind, text, media_ref,
-    offset).  This is the ENGINE's extractor (fetch stage); the
-    sequential oracle uses its own independent regex-based reader
-    (oracle.regex_extract_spans), so span-sequence equality tests
-    compare two independent walks of the same wire format and a bug in
-    either one surfaces as a mismatch."""
-    return _SpanExtractor().feed(html)
+    offset).  This is the ENGINE's extractor (fetch stage): one
+    left-to-right ``str.find`` scan for the two span markers, taking
+    whichever comes first — a ``td.ssp`` cell is sliced to its
+    ``</td>``, an ``a.ssm`` href to its closing quote, and both are
+    ``html.unescape``d.  The ~500 other tags of the page are never
+    looked at.  The sequential oracle uses its own independent regex
+    reader (oracle.regex_extract_spans), so span-sequence equality
+    tests compare two independent walks of the same wire format and a
+    bug in either one surfaces as a mismatch.
+
+    A page this scan cannot read raises ``ValueError`` instead of
+    yielding a short span sequence: a truncated body (no closing
+    ``</html>``), a cell with no ``</td>``, an href with no closing
+    quote, or markup (a raw ``<``) inside a text cell."""
+    from html import unescape
+
+    if not html.rstrip().endswith("</html>"):
+        raise ValueError("case page truncated: no closing </html>")
+    find = html.find
+    spans: list[dict] = []
+    t = find(_TEXT_OPEN)
+    m = find(_MEDIA_OPEN)
+    while t >= 0 or m >= 0:
+        if m < 0 or 0 <= t < m:
+            start = t + len(_TEXT_OPEN)
+            end = find("</td>", start)
+            if end < 0:
+                raise ValueError(f"td.ssp cell at {t} has no </td>")
+            text = html[start:end]
+            if "<" in text:
+                raise ValueError(f"td.ssp cell at {t} holds markup")
+            spans.append(
+                {
+                    "kind": "text",
+                    "text": unescape(text),
+                    "media_ref": "",
+                    "offset": len(spans),
+                }
+            )
+            t = find(_TEXT_OPEN, end)
+        else:
+            start = m + len(_MEDIA_OPEN)
+            end = find('"', start)
+            if end < 0:
+                raise ValueError(f"a.ssm href at {m} has no closing quote")
+            spans.append(
+                {
+                    "kind": "media",
+                    "text": "",
+                    "media_ref": unescape(html[start:end]),
+                    "offset": len(spans),
+                }
+            )
+            m = find(_MEDIA_OPEN, end)
+    return spans
 
 
 # ---------------------------------------------------------------------------

@@ -127,7 +127,7 @@ def test_publish_versioning():
 
 
 def test_independent_extractors_agree():
-    """The engine's html.parser extractor and the oracle's regex
+    """The engine's marker-scan extractor and the oracle's regex
     extractor are independent readers of the wire format; they must
     recover identical span sequences (the extractor's own ground
     truth — ADVICE r1)."""
@@ -137,6 +137,69 @@ def test_independent_extractors_agree():
     b = oracle.regex_extract_spans(html)
     assert a == b
     assert a == spans  # and both equal the source sequence
+
+
+def test_extractors_agree_on_every_case_page():
+    """Engine == oracle == source spans over every case page of 20
+    counties (each county's whole case pool), at generations 0 and 1,
+    plus hand-built spans holding every character the wire escapes
+    and the noise characters the parser later scrubs."""
+    pages = [
+        synth.case_spans(i, str((i + 1) * 100000 + k), g)
+        for i in range(20)
+        for k in range(synth.county_case_pool_size(i))
+        for g in (0, 1)
+    ]
+    assert len(pages) >= 400  # >= 200 (county, case_id) pairs
+    pages.append(
+        [
+            {"kind": "text", "text": t, "media_ref": "", "offset": 0}
+            for t in (
+                'a & b < c > d "e"',
+                "&amp; &lt;/td&gt; &#169;",
+                "\tcol\t\xa0Â\t",
+                "</td>",
+                "",
+            )
+        ]
+        + [
+            {"kind": "media", "text": "", "media_ref": r, "offset": 0}
+            for r in ('View.aspx?a=1&b="2"', "&quot;", "")
+        ]
+    )
+    for off, s in enumerate(pages[-1]):
+        s["offset"] = off
+    for spans in pages:
+        html = synth.render_case_html(spans)
+        assert synth.extract_spans(html) == spans
+        assert oracle.regex_extract_spans(html) == spans
+
+
+def _truncated_in_tenth_cell() -> str:
+    html = synth.render_case_html(synth.case_spans(0, "100001"))
+    at = -1
+    for _ in range(10):
+        at = html.index('<td class="ssp">', at + 1)
+    return html[: at + len('<td class="ssp">') + 2]
+
+
+@pytest.mark.parametrize(
+    "html,error",
+    [
+        ('<html><td class="ssp">no close</tr></html>', "no </td>"),
+        ('<html><a class="ssm" href="View.aspx?Id=1></a></html>', "no closing quote"),
+        ('<html><td class="ssp">a <b>bold</b> cell</td></html>', "holds markup"),
+        (_truncated_in_tenth_cell(), "truncated"),
+        (synth.render_case_html(synth.case_spans(0, "100001"))[:-20], "truncated"),
+    ],
+    ids=["cell", "href", "markup", "cut-in-cell", "cut-in-footer"],
+)
+def test_extract_spans_rejects_malformed_pages(html, error):
+    """A page the engine cannot read fails loudly instead of yielding
+    the spans before the damage (the regex reader, for one, reads 10
+    of the 56 spans of a page cut inside its 10th cell)."""
+    with pytest.raises(ValueError, match=error):
+        synth.extract_spans(html)
 
 
 def test_html_wire_round_trip():

@@ -1,13 +1,14 @@
-"""Spark jobs per crawl wave, pinned; checkpoint files against their
-declared schemas.
+"""Spark jobs and stages per crawl wave, pinned; checkpoint files
+against their declared schemas.
 
 Each Spark job costs a wave scheduling, a stage and at least one task
 however little data it moves, and a crawl's waves are dominated by
 that fixed cost (ROADMAP item 2).  The crawl below runs one wave per
-``run(max_waves=1)`` call and counts the jobs each call submits with
-the status tracker, so a change that adds a job to the wave fails
-here.  The bounds are the counts measured on the code that set them;
-lower them when a change cuts a job.
+``run(max_waves=1)`` call and counts the jobs each call submits, and
+the stages those jobs ran, with the status tracker, so a change that
+adds a job or a stage to the wave fails here.  The bounds are the
+counts measured on the code that set them; lower them when a change
+cuts a job or a stage.
 
 The crawl tables are read with their declared schemas (no footer
 inference), so a parquet column whose type drifted from the
@@ -32,6 +33,9 @@ N_DAYS = 2
 SEED_JOBS = 2
 # waves 0-3: seeds -> search pages -> results pages -> case pages
 WAVE_JOBS = [12, 13, 13, 14]
+# stages that ran tasks: a stage a job lists but skips (its shuffle
+# output already exists) is not counted
+WAVE_STAGES = [12, 13, 13, 14]
 
 
 def _jobs_so_far(sc) -> int:
@@ -40,6 +44,24 @@ def _jobs_so_far(sc) -> int:
     so drain it first."""
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _stages_ran(sc, jobs: range, counted: set[int]) -> int:
+    """Stages of ``jobs`` that ran tasks and are not in ``counted``
+    (which they join).  A skipped stage completes no task; the status
+    store, once over ``spark.ui.retainedStages``, drops skipped stages
+    first (they have no completion time), so a missing one is skipped
+    too."""
+    st = sc.statusTracker()
+    ran = set()
+    for j in jobs:
+        for sid in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks > 0:
+                ran.add(sid)
+    ran -= counted
+    counted |= ran
+    return len(ran)
 
 
 @pytest.fixture(scope="module")
@@ -52,17 +74,20 @@ def crawl(spark, tmp_path_factory):
     last = _jobs_so_far(sc)
     eng.run(max_waves=0)  # the seed write alone
     now = _jobs_so_far(sc)
+    counted: set[int] = set()
+    _stages_ran(sc, range(last + 1, now + 1), counted)
     seed_jobs, last = now - last, now
-    wave_jobs = []
+    wave_jobs, wave_stages = [], []
     while eng.run(max_waves=1):
         now = _jobs_so_far(sc)
         wave_jobs.append(now - last)
+        wave_stages.append(_stages_ran(sc, range(last + 1, now + 1), counted))
         last = now
-    return eng, reg, seed_jobs, wave_jobs
+    return eng, reg, seed_jobs, wave_jobs, wave_stages
 
 
 def test_spark_jobs_per_wave_pinned(crawl):
-    eng, reg, seed_jobs, wave_jobs = crawl
+    eng, reg, seed_jobs, wave_jobs, _ = crawl
     # the crawl is the reference's, or the counts mean nothing
     want = {f["url"] for f in oracle.crawl(reg, START, N_DAYS).fetches}
     assert {r["canonical_url"] for r in eng.fetch_log().collect()} == want
@@ -70,6 +95,13 @@ def test_spark_jobs_per_wave_pinned(crawl):
     assert seed_jobs <= SEED_JOBS, seed_jobs
     for w, (n, bound) in enumerate(zip(wave_jobs, WAVE_JOBS)):
         assert n <= bound, f"wave {w}: {n} Spark jobs > {bound} ({wave_jobs})"
+
+
+def test_spark_stages_per_wave_pinned(crawl):
+    wave_stages = crawl[4]
+    assert len(wave_stages) == len(WAVE_STAGES), wave_stages
+    for w, (n, bound) in enumerate(zip(wave_stages, WAVE_STAGES)):
+        assert n <= bound, f"wave {w}: {n} Spark stages > {bound} ({wave_stages})"
 
 
 def test_checkpoint_files_match_declared_schemas(crawl):
