@@ -6,7 +6,7 @@ web-crawl + parse + clean + publish system; see /root/repo/SURVEY.md)
 as a distributed Spark DataFrame program:
 
 - ``plans.frontier``   — distributed URL frontier: canonicalization,
-  partitioned-bloom URL-seen filter, robots.txt compliance, per-host
+  exact anti-join URL-seen filter, robots.txt compliance, per-host
   politeness token bucket, priority ordering, deterministic wave loop
   with checkpoint/resume (reference: src/scraper/__init__.py:568-588).
 - ``operators.parse``  — vectorized span-sequence -> typed case-record

@@ -12,7 +12,7 @@ LongType — fine as a fast engine-internal key, but not byte-equal with
 the reference digests.  So the engine carries two flavors:
 
 - ``F.xxhash64(col)``            — fast JVM path for engine-internal
-  keys (bloom pre-filter, salting, partitioning).
+  keys (salting, partitioning).
 - ``xxh64_hex_udf``              — reference-parity hex digests via an
   Arrow-batched pandas UDF.  The XXH64 core below is a from-spec
   implementation of the public xxHash algorithm (Yann Collet,

@@ -405,8 +405,8 @@ def parse_documents_incremental(
     cached-parsed list but never uses it (parser/__init__.py:207-209 —
     dead code); default :func:`parse_documents` keeps the reference's
     actual overwrite behavior, this variant implements the evidently
-    intended semantics.  At scale the anti-join rides the bloom-style
-    pre-filter pattern of the URL-seen path."""
+    intended semantics, with the same exact anti-join the URL-seen
+    filter uses."""
     fresh = documents.join(
         already_parsed.select(
             already_parsed["odyssey_id"].alias("doc_id")

@@ -180,9 +180,9 @@ def nation_customer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def customers_without_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left anti join — the URL/content-seen dedup shape (J4/D2,
-    updater/__init__.py:92-105).  At 10^10 keys this is the bloom-
-    prefiltered anti-join in plans/frontier.py; here the plain exact
-    form (anti vs a filtered subset so the result is non-trivial)."""
+    updater/__init__.py:92-105), the exact form plans/frontier.py
+    runs per wave (anti vs a filtered subset so the result is
+    non-trivial)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey")

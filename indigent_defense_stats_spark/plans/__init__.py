@@ -1,1 +1,1 @@
-"""Crawl plans: distributed URL frontier, bloom seen-filter, wave loop."""
+"""Crawl plans: distributed URL frontier, URL-seen filter, wave loop."""

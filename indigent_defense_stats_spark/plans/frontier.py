@@ -10,7 +10,7 @@ DataFrame program:
             -> expand (native column ops: version branch, date x
                officer cross, link extraction + canonicalization)
             -> robots filter
-            -> URL-seen dedup (partitioned bloom + exact anti-join)
+            -> URL-seen dedup (exact left anti-join on canonical_url)
             -> checkpoint frontier/seen/documents/log/metrics]
 
 Ordering contract (BASELINE.json north_rule): every URL carries the
@@ -78,7 +78,6 @@ from pyspark.sql.types import (
 from .. import schemas, synth
 from ..functions.urls import absolutize, canonicalize_col
 from ..sources.catalog import DeltaTable, SnapshotTable
-from . import bloom
 
 POLITENESS_MS = 200  # scraper/__init__.py:57
 MAX_RETRIES = 5  # scraper/helpers.py:88
@@ -283,8 +282,6 @@ class CrawlEngine:
         politeness_ms: int = POLITENESS_MS,
         max_retries: int = MAX_RETRIES,
         n_buckets: int = 16,
-        bloom_bits: int = 1 << 20,
-        bloom_threshold: int = 10_000,
         max_per_host_per_wave: int | None = None,
         priority: str = "reference",  # 'reference' | 'recency'
         robots_rules: dict[str, list[str]] | None = None,
@@ -307,9 +304,6 @@ class CrawlEngine:
         self.politeness_ms = politeness_ms
         self.max_retries = max_retries
         self.n_buckets = n_buckets
-        self.bloom_bits = bloom_bits
-        self.bloom_threshold = bloom_threshold
-        self._seen_count = 0
         self.max_per_host = max_per_host_per_wave
         # global per-wave fetch budget, split ACROSS hosts max-min
         # fairly (operators/freshness.waterfill) — small hosts get
@@ -341,11 +335,6 @@ class CrawlEngine:
             key="canonical_url",
         )
         self.host_state_t = t("host_state", HOST_STATE, "overwrite")
-        # persisted bloom bits: incrementally OR-updated per wave
-        # (O(wave)), never rebuilt from the full seen set — rollback
-        # participates via the same wave tags so state stays in lock-
-        # step with seen after a mid-wave kill
-        self.bloom_t = t("bloom", bloom.BLOOM_SCHEMA, "overwrite")
         self.seen_t = t("seen", SEEN, "append")
         self.documents_t = t("documents", schemas.DOCUMENTS, "append")
         self.log_t = t("fetch_log", LOG_SCHEMA, "append")
@@ -486,7 +475,6 @@ class CrawlEngine:
             self.host_state_t,
             self.log_t,
             self.metrics_t,
-            self.bloom_t,
         )
 
     def _rollback_uncommitted(self) -> None:
@@ -679,77 +667,6 @@ class CrawlEngine:
                 .coalesce(self.n_buckets),
                 {"wave": wave},
             )
-
-    def _update_bloom_state(self, snap: int, wave: int) -> None:
-        """OR the snapshot's adds into the persisted bloom bits.
-
-        The adds parquet already carries (bucket, h1, h2) — computed
-        as JVM expressions inside the wave's write job — so the update
-        is a driver-side numpy pass over three int64 columns plus a
-        pyarrow state write: O(adds) rows of metadata-cheap I/O, no
-        Spark job, no hashing.  Oversized deltas (> 64 MB) fall back
-        to the distributed ``bloom.update_state`` job so the driver
-        never materializes an unbounded wave."""
-        d = self.frontier_t.adds_dir(snap)
-        if d is None:
-            return
-        from ..sources.catalog import parquet_dir_bytes
-
-        if parquet_dir_bytes(d) > 64 * 1024 * 1024:
-            state = bloom.update_state(
-                self.bloom_t.read(),
-                self.spark.read.parquet(d),
-                "canonical_url",
-                self.n_buckets,
-                self.bloom_bits,
-            )
-            self.bloom_t.write(state.coalesce(1), {"wave": wave})
-            return
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        import numpy as np
-
-        parts = [
-            pq.read_table(os.path.join(d, n), columns=["bucket", "h1", "h2"])
-            for n in sorted(os.listdir(d))
-            if n.startswith("part-") and n.endswith(".parquet")
-        ]
-        t = pa.concat_tables(parts)
-        state: dict[int, np.ndarray] = {}
-        prev = self.bloom_t.latest()
-        if prev is not None:
-            data_dir = os.path.join(self.bloom_t._snap_dir(prev), "data")
-            for n in sorted(os.listdir(data_dir)):
-                if n.startswith("part-") and n.endswith(".parquet"):
-                    st = pq.read_table(os.path.join(data_dir, n))
-                    for b, bits in zip(
-                        st["bucket"].to_pylist(), st["bits"].to_pylist()
-                    ):
-                        state[int(b)] = np.frombuffer(
-                            bits, dtype=np.uint8
-                        ).copy()
-        bucket = t["bucket"].to_numpy()
-        idx_all = bloom._indices(
-            t["h1"].to_numpy(), t["h2"].to_numpy(), self.bloom_bits
-        )
-        for b in np.unique(bucket):
-            bits = state.get(int(b))
-            if bits is None:
-                bits = np.zeros(self.bloom_bits // 8, dtype=np.uint8)
-                state[int(b)] = bits
-            idx = idx_all[bucket == b].ravel()
-            np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
-        out = pa.table(
-            {
-                "bucket": pa.array(sorted(state), pa.int32()),
-                "bits": pa.array(
-                    [state[b].tobytes() for b in sorted(state)], pa.binary()
-                ),
-            }
-        )
-        self.bloom_t.write_local(out, {"wave": wave})
 
     # ---------------------------------------------------------- AIMD
     def _aimd_base(self, host: str) -> int:
@@ -1064,7 +981,9 @@ class CrawlEngine:
         )
 
     def _dedup(self, candidates: DataFrame) -> DataFrame:
-        """Within-batch first-discovery dedup + robots + bloom seen."""
+        """Within-batch first-discovery dedup + robots + URL-seen
+        filter: an exact left anti-join against the append-only seen
+        set (updater/__init__.py:92-105 is an exact lookup too)."""
         w = Window.partitionBy("canonical_url").orderBy(
             "county_ord", "prio", "date_ord", "jo_ord", "link_ord"
         )
@@ -1077,23 +996,7 @@ class CrawlEngine:
         seen = self.seen_t.read()
         if seen is None:
             return cand
-        # Adaptive seen-filter: below the threshold a plain exact
-        # anti-join is cheaper than building+probing blooms (3 extra
-        # exchanges); above it — the 10^10-URL regime — the partitioned
-        # bloom pre-filter keeps the anti-join shuffle to bloom
-        # positives only (true dups + fp rate).
-        if self._seen_count <= self.bloom_threshold:
-            return cand.join(seen, "canonical_url", "left_anti")
-        # probe the PERSISTED bloom state (maintained incrementally per
-        # wave) — no O(seen) filter rebuild inside the wave's plan
-        state = self.bloom_t.read()
-        if state is None:  # e.g. filter switched on mid-crawl
-            return bloom.filter_new(
-                cand, seen, "canonical_url", self.n_buckets, self.bloom_bits
-            )
-        return bloom.filter_new_with_state(
-            cand, seen, state, "canonical_url", self.n_buckets, self.bloom_bits
-        )
+        return cand.join(seen, "canonical_url", "left_anti")
 
     # ------------------------------------------------------------------
     def run(self, max_waves: int = 200, verbose: bool = False) -> list[WaveStats]:
@@ -1125,13 +1028,9 @@ class CrawlEngine:
             # seeds' canonical_urls, copied from the written base files
             # driver-side (same derivation as the per-wave path)
             base_snap = self.frontier_t.write_base(
-                bloom.with_bucket_and_hashes(
-                    self.seeds(), "canonical_url", self.n_buckets
-                ).coalesce(1),
-                {"wave": -1, "event": "seed"},
+                self.seeds().coalesce(1), {"wave": -1, "event": "seed"}
             )
             self._append_seen_from_adds(base_snap, -1)
-            self._update_bloom_state(base_snap, -1)
             self._commit_wave(-1)
             frontier = self.frontier_t.read()
         # resume numbering: after the rollback above every surviving
@@ -1145,7 +1044,6 @@ class CrawlEngine:
         # politeness clocks: in-memory during the run, checkpointed per
         # wave, reloaded on resume
         self._load_clocks()
-        self._seen_count = self.seen_t.rowcount()  # footer metadata, no job
         if self.adaptive_politeness:
             self._aimd_replay()  # deterministic from the fetch log
         # pending cardinality is tracked driver-side across waves
@@ -1248,14 +1146,8 @@ class CrawlEngine:
                 # job over a cached plan.
                 froncols = [f.name for f in schemas.FRONTIER.fields]
                 n_removed = n_fetched + n_failed
-                # adds carry (bucket, h1, h2) as extra parquet columns —
-                # free JVM exprs inside the write job; the driver-side
-                # bloom update then needs no hashing and no Spark job
-                adds_hashed = bloom.with_bucket_and_hashes(
-                    new_pending.select(*froncols), "canonical_url", self.n_buckets
-                )
                 delta_snap = self.frontier_t.write_delta(
-                    adds=adds_hashed.coalesce(self.n_buckets),
+                    adds=new_pending.select(*froncols).coalesce(self.n_buckets),
                     removes=fetched.select("canonical_url").coalesce(1),
                     meta={"wave": wave},
                     n_removes=n_removed,
@@ -1272,16 +1164,8 @@ class CrawlEngine:
                 if self.frontier_t.compaction_pays(n_after):
                     self.frontier_t.compact({"wave": wave, "event": "compact"})
                 mark("frontier write")
-                bloom_future = None
                 if n_new:
                     self._append_seen_from_adds(delta_snap, wave)
-                    self._seen_count += n_new
-                    # bloom maintenance is O(wave) and overlaps the
-                    # tail of the wave in the writer pool; joined
-                    # before the commit marker
-                    bloom_future = self._pool.submit(
-                        self._update_bloom_state, delta_snap, wave
-                    )
 
                 # host clocks carry politeness budget across waves
                 # (merged driver-side from the wave summary collect);
@@ -1295,8 +1179,6 @@ class CrawlEngine:
                 lineage_future.result()
                 if docs_future is not None:
                     docs_future.result()
-                if bloom_future is not None:
-                    bloom_future.result()
                 mark("log+metrics+docs join")
                 self._commit_wave(wave)
             finally:
@@ -1328,8 +1210,8 @@ class CrawlEngine:
         default; applied as a broadcast semi-join on the seed scan, so
         the politeness budget is spent only on the selected pages.
 
-        What a refresh deliberately does NOT touch: frontier, seen,
-        bloom — it discovers nothing (case pages expand to nothing;
+        What a refresh deliberately does NOT touch: frontier and
+        seen — it discovers nothing (case pages expand to nothing;
         re-listing a known URL is not a discovery).  Politeness clocks
         carry on from the crawl via host_state, so the refresh fetch
         is paced like any wave.  Scale shape: the seed set is the

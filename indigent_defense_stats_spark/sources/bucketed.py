@@ -11,14 +11,13 @@ SortMergeJoin.  ``tests/test_plans.py`` asserts exactly that from the
 executed plan: cold bucketed tables join with ZERO ShuffleExchange
 nodes, while the identical unbucketed layout shuffles both sides.
 
-This is the same layout contract the frontier uses operationally
-(hash-partitioned URL-seen shards, cluster_id-partitioned IVF index:
-plans/bloom.py, operators/similarity.py); here it is exposed as the
-general table-format primitive.  Production mapping: Spark bucketed
-tables == Iceberg ``bucket(N, key)`` partition transforms (the
-metastore-free equivalent); a crawl deployment buckets the frontier,
-the seen-set and the documents table by host/doc key so wave joins
-never re-shuffle the corpus.
+This is the same layout contract the engine uses operationally
+(cluster_id-partitioned IVF index: operators/similarity.py); here it
+is exposed as the general table-format primitive.  Production
+mapping: Spark bucketed tables == Iceberg ``bucket(N, key)``
+partition transforms (the metastore-free equivalent); a crawl
+deployment buckets the frontier, the seen-set and the documents table
+by host/doc key so wave joins never re-shuffle the corpus.
 
 Sizing rule of thumb: buckets ≈ (table bytes / target partition
 bytes), rounded to a power of two, with target ≈ 128-512 MB so a

@@ -401,9 +401,7 @@ class DeltaTable:
         adds, removes = self._live_paths()
         if not adds:
             return None
-        # read with the declared schema: no footer-inference job, and
-        # auxiliary columns writers attach to the adds files (e.g.
-        # precomputed bloom hashes) are never even scanned
+        # read with the declared schema: no footer-inference job
         df = self.spark.read.schema(self.schema).parquet(*adds)
         if removes:
             # explicit one-column schema: remove files may carry extra

@@ -30,11 +30,11 @@ Scale: sitemap bytes are ~1/32nd of page bytes (1 XML per ``_PAGE``
 URLs; 1/50,000th at RFC size), so parsing is a cheap map over
 fetched XML; the index-resolution join broadcasts the exploded refs
 (one row per child sitemap, never per URL); the final dedup is ONE
-linear shuffle keyed by url — the same key the bloom seen-filter
-shards on (plans/bloom.py), so discovered URLs flow into
-``filter_new`` without a re-partition.  Skewed hosts are defused by
-the paging itself: each page is an independent row, so the big
-host's URLs arrive pre-split across ``ceil(n/_PAGE)`` inputs.
+linear shuffle keyed by url — the key of the crawl's URL-seen
+anti-join, so discovered URLs flow into it without a re-partition.
+Skewed hosts are defused by the paging itself: each page is an
+independent row, so the big host's URLs arrive pre-split across
+``ceil(n/_PAGE)`` inputs.
 
 Boundary: ``<loc>`` values here are machine-built (scheme + host +
 digits) so no XML entity escaping is needed on the build side; a
@@ -270,7 +270,7 @@ def parse_sitemaps(fetched: DataFrame, entry_points: DataFrame | None = None) ->
         )
     )
     # sitemaps.org allows the same URL in several sitemaps: keep the
-    # freshest lastmod.  Keyed by url == the bloom seen-filter key.
+    # freshest lastmod.  Keyed by url == the URL-seen filter key.
     return urls.groupBy("host", "url").agg(
         F.max("lastmod").alias("lastmod"),
         F.max("priority").alias("priority"),
@@ -300,7 +300,7 @@ def stale_case_seeds(parsed: DataFrame, last_crawl_date) -> DataFrame:
 
 def sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build + parse round trip: the discovered-URL table a crawl
-    would merge into its frontier (after plans/bloom.filter_new)."""
+    would merge into its frontier (after the URL-seen anti-join)."""
     return parse_sitemaps(build_sitemaps(spark, sf_dir)).orderBy("url")
 
 

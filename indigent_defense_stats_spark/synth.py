@@ -573,8 +573,8 @@ def render_case_html(spans: list[dict]) -> str:
     Text spans become ``<td class="ssp">`` cells (tabs/\\xa0 inside the
     text survive verbatim — HTML does not normalize character data);
     media spans become ``<a class="ssm" href=...>`` anchors.  Enough
-    deterministic boilerplate surrounds them that page size and parse
-    cost are representative of the real portal (~20 KB vs the
+    deterministic boilerplate surrounds them that page size is
+    representative of the real portal (~42 KB per page, next to the
     reference's ~40 KB fixture)."""
     import html as _h
 

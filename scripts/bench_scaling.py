@@ -15,7 +15,7 @@ Two jobs, each run at local[2] / local[8] / local[32]:
   ``mapInPandas``.  This is the stage that dominates a production
   crawl and the one that must scale to 4N executors.
 - ``crawl`` — the full wave-loop engine end-to-end (politeness
-  scheduling, expansion, bloom/anti-join dedup, snapshot checkpoints,
+  scheduling, expansion, anti-join dedup, snapshot checkpoints,
   final parse), 254 counties, SPARK_GRAFT_CASE_POOL_SCALE pool.
 
 The report also measures the machine's intrinsic parallel ceiling

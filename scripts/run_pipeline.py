@@ -52,7 +52,7 @@ def main() -> None:
         help="after the crawl, ingest the portals' sitemaps covering"
         " the crawl window plus EXTRA_DAYS more days, and report how"
         " many genuinely-new URLs the sitemap channel adds after the"
-        " bloom seen-filter (the second discovery channel)",
+        " exact URL-seen anti-join (the second discovery channel)",
     )
     ap.add_argument(
         "--warc-out",
@@ -236,7 +236,6 @@ def main() -> None:
 
     # ---- sitemap discovery channel (optional) ------------------------------
     if args.discover:
-        from indigent_defense_stats_spark.plans import bloom
         from indigent_defense_stats_spark.sources import sitemap
 
         t_d = time.time()
@@ -285,10 +284,7 @@ def main() -> None:
         seen = eng.fetch_log().filter(
             F.col("canonical_url").contains("CaseDetail.aspx")
         ).select(F.col("canonical_url").alias("url"))
-        new = bloom.filter_new(
-            discovered.select("url"), seen, url_col="url",
-            n_buckets=16, n_bits=1 << 16,
-        )
+        new = discovered.select("url").join(seen, "url", "left_anti")
         print(
             f"[discover] sitemap_urls={discovered.count()} "
             f"new_after_seen_filter={new.count()} "

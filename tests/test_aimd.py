@@ -32,7 +32,6 @@ def eng(spark, tmp_path_factory, reg):
         START,
         N_DAYS,
         n_buckets=4,
-        bloom_threshold=0,
         adaptive_politeness=True,
     )
     e.run()
@@ -97,7 +96,6 @@ def test_resume_replays_identical_state(spark, eng, reg):
         START,
         N_DAYS,
         n_buckets=4,
-        bloom_threshold=0,
         adaptive_politeness=True,
     )
     fresh._aimd_replay()

@@ -30,7 +30,6 @@ def engine(spark, tmp_path_factory, world):
         START,
         2,
         n_buckets=4,
-        bloom_threshold=0,  # force the partitioned-bloom dedup path
     )
     eng.run()
     return eng

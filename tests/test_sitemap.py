@@ -1,6 +1,6 @@
 """Sitemap XML ingestion (sources/sitemap.py): root-tag dispatch,
 index recursion, overlap dedup, malformed-document drop, and the
-frontier hand-off through the bloom seen-filter."""
+frontier hand-off through the exact URL-seen anti-join."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from indigent_defense_stats_spark.plans import bloom
 from indigent_defense_stats_spark.sources import sitemap
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -133,23 +132,19 @@ def test_build_pages_cap_and_index_listing(spark):
                 assert r.xml.count("<url>") <= sitemap._PAGE
 
 
-def test_discovered_urls_flow_through_bloom_seen_filter(spark):
+def test_discovered_urls_flow_through_exact_seen_filter(spark):
     """The crawl hand-off: sitemap-discovered URLs minus the already-
-    seen set via the partitioned bloom filter — no false negatives
-    (every genuinely-new URL survives)."""
+    seen set via the exact left anti-join the crawl's seen filter
+    uses — every genuinely-new URL survives, every seen one drops."""
     discovered = sitemap.sitemap_frontier(spark, SF_DIR)
     seen = discovered.filter(F.col("url").rlike("/case/\\d*[02468]$")).select("url")
-    new = bloom.filter_new(
-        discovered.select("url"), seen, url_col="url", n_buckets=8, n_bits=1 << 14
-    )
+    new = discovered.select("url").join(seen, "url", "left_anti")
     got = {r.url for r in new.collect()}
     want = {
         r.url
         for r in discovered.collect()
         if int(r.url.rsplit("/", 1)[1]) % 2 == 1
     }
-    # filter_new exact-verifies bloom positives against the seen set,
-    # so the result is exact (no FP drops) — require equality
     assert got == want
 
 

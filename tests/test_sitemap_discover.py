@@ -18,7 +18,6 @@ from indigent_defense_stats_spark.operators.crawl_queries import (
     START,
     _engine,
 )
-from indigent_defense_stats_spark.plans import bloom
 from indigent_defense_stats_spark.sources import sitemap
 
 _UNIX_EPOCH_ORD = date(1970, 1, 1).toordinal()
@@ -83,30 +82,26 @@ def test_same_window_discovers_exactly_the_crawled_cases(spark, crawl_seen):
     )
     got = {r.url for r in discovered.select("url").collect()}
     assert got == crawl_seen
-    new = bloom.filter_new(
-        discovered.select("url"),
+    new = discovered.select("url").join(
         spark.createDataFrame([(u,) for u in sorted(crawl_seen)], "url string"),
-        url_col="url",
-        n_buckets=4,
-        n_bits=1 << 14,
+        "url",
+        "left_anti",
     )
     assert new.count() == 0
 
 
 def test_extra_days_discover_only_the_unseen_tail(spark, crawl_seen):
-    """With extra days, filter_new returns exactly the case URLs that
-    appear ONLY in the extra window (the pool re-lists many cases the
-    crawl already fetched — realistic sitemap overlap)."""
+    """With extra days, the seen filter returns exactly the case URLs
+    that appear ONLY in the extra window (the pool re-lists many cases
+    the crawl already fetched — realistic sitemap overlap)."""
     discovered = sitemap.parse_sitemaps(
         sitemap.build_sitemaps_from(_published(spark, extra_days=3))
     )
     got = {r.url for r in discovered.select("url").collect()}
     assert crawl_seen <= got  # the crawl window is a subset
-    new = bloom.filter_new(
-        discovered.select("url"),
+    new = discovered.select("url").join(
         spark.createDataFrame([(u,) for u in sorted(crawl_seen)], "url string"),
-        url_col="url",
-        n_buckets=4,
-        n_bits=1 << 14,
+        "url",
+        "left_anti",
     )
     assert {r.url for r in new.collect()} == got - crawl_seen

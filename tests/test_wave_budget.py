@@ -32,7 +32,6 @@ def _run(spark, tmp_path_factory, reg, **kw):
         START,
         N_DAYS,
         n_buckets=4,
-        bloom_threshold=0,
         **kw,
     )
     eng.run()

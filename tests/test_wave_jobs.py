@@ -108,7 +108,9 @@ def test_checkpoint_files_match_declared_schemas(crawl):
     """Every parquet file of every crawl table carries each declared
     field with the declared type (nullability aside: Spark reads
     files as nullable).  The frontier's remove files are key-only by
-    design and are left out."""
+    design and are left out; its adds and base files carry exactly the
+    declared fields, no side columns, and the crawl dir holds no
+    ``bloom`` table."""
     eng = crawl[0]
     tables = {
         "frontier": eng.frontier_t,
@@ -117,8 +119,8 @@ def test_checkpoint_files_match_declared_schemas(crawl):
         "host_state": eng.host_state_t,
         "fetch_log": eng.log_t,
         "metrics": eng.metrics_t,
-        "bloom": eng.bloom_t,
     }
+    assert not os.path.exists(os.path.join(eng.base_dir, "bloom"))
     for name, t in tables.items():
         files = [
             os.path.join(d, f)
@@ -137,4 +139,8 @@ def test_checkpoint_files_match_declared_schemas(crawl):
                 assert got.get(field.name) == field.dataType.simpleString(), (
                     f"{name}: {path} has {field.name} as {got.get(field.name)},"
                     f" declared {field.dataType.simpleString()}"
+                )
+            if name == "frontier":
+                assert set(got) == set(t.schema.fieldNames()), (
+                    f"{path} has {sorted(got)}, declared {t.schema.fieldNames()}"
                 )
