@@ -24,10 +24,9 @@ concatenation, entity decoding (``&nbsp;`` -> ``\\xa0``), and
 tolerance of self-closed ``<td/>`` / void elements.
 
 Spark surface: :func:`parse_odyssey_pages` — one ``mapInPandas`` pass
-over (doc_id, county, html), no shuffle, same JSON-hop pattern as
-``parse.parse_documents`` (per-document branchy logic stays in plain
-Python inside Arrow batches; the nested record returns to the JVM as
-one JSON string).
+over (doc_id, county, html), no shuffle (per-document branchy logic
+stays in plain Python inside Arrow batches; the record returns to the
+JVM as one reference-shaped JSON string, its output format).
 """
 
 from __future__ import annotations
@@ -383,8 +382,8 @@ def parse_odyssey_pages(pages):
     """(doc_id, county, html) -> one reference-shaped JSON record per
     page.  Single ``mapInPandas`` pass — per-document-local, zero
     shuffle, linear at 100 TB; Arrow batches amortize dispatch and the
-    nested record rides back to the JVM as a JSON string (same measured
-    rationale as parse.parse_documents).
+    record rides back to the JVM as the reference-shaped JSON string
+    it is published as.
 
     Output: doc_id, county, code, case_json (full reference-shape
     record), parse_error (NULL for good rows — same quarantine contract

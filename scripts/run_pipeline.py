@@ -147,7 +147,10 @@ def main() -> None:
     # ---- parse (P7-P13, A1-A2, O1-O2, F8) --------------------------------
     # quality counters ride the SAME action via Observation (side-
     # channel accumulators, no second pass): counting good and
-    # quarantined separately would re-run the mapInPandas parse twice
+    # quarantined separately would re-run the parse twice.  good is
+    # persisted: clean's two branches, publish's checkpoints and the
+    # analytics each read it, and would each re-run the parse otherwise
+    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
     obs = Observation("parse")
@@ -158,7 +161,7 @@ def main() -> None:
             F.when(F.col("parse_error").isNull(), 1).otherwise(0)
         ).alias("n_good"),
     )
-    good = parse.good_records(parsed)
+    good = parse.good_records(parsed).persist(StorageLevel.MEMORY_AND_DISK)
     n_good = good.count()  # the one action; metrics populate with it
     m = obs.get
     assert m["n_good"] == n_good
@@ -184,7 +187,9 @@ def main() -> None:
     # ---- refresh generations (updater flow, optional) ----------------------
     for g in range(1, args.refresh + 1):
         docs_g = eng.refresh(generation=g)
-        good_g = parse.good_records(parse.parse_documents(docs_g))
+        good_g = parse.good_records(parse.parse_documents(docs_g)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         cleaned_g = clean.clean_records(
             good_g, charge_dim, parsing_date="2024-07-31"
         )
@@ -193,6 +198,7 @@ def main() -> None:
             f"[refresh g={g}] refetched={docs_g.count()} "
             f"versioned={ins_g.count()} (hash-skipped the rest)"
         )
+        good_g.unpersist()
 
     # ---- WARC archive sink (optional) --------------------------------------
     if args.warc_out:
@@ -300,6 +306,7 @@ def main() -> None:
         F.round(F.avg("days_elapsed"), 2).alias("avg_days_elapsed"),
     ).orderBy("attorney").show(truncate=False)
 
+    good.unpersist()
     print(f"[done] total {time.time()-t0:.1f}s")
     spark.stop()
 

@@ -1,7 +1,7 @@
 """Spark parse stage vs sequential oracle: per-row record equality.
 
 This is the BASELINE.json per-row invariant surface: the engine's
-vectorized mapInPandas parse must reproduce the oracle's (reference-
+vectorized mapInArrow parse must reproduce the oracle's (reference-
 semantics) parse exactly, including the reversal quirks.
 """
 
@@ -156,6 +156,48 @@ def test_quarantine_on_malformed_doc(spark):
     q = parse_mod.quarantine(out).collect()
     assert len(q) == 1 and q[0]["parse_error"]
     assert parse_mod.good_records(out).count() == 0
+
+
+def test_null_span_list_quarantines(spark):
+    """A NULL span list (possible in a table whose schema allows it)
+    quarantines like any malformed document; it is not parsed as an
+    empty page."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    schema = StructType(
+        schemas.DOCUMENTS.fields[:2]
+        + [StructField("spans", ArrayType(schemas.SPAN, False), True)]
+    )
+    rows = [("1", "countyX", None), ("2", "countyX", [("text", "c-2", "", 0)])]
+    out = parse_mod.parse_documents(spark.createDataFrame(rows, schema))
+    q = parse_mod.quarantine(out).collect()
+    assert [r["odyssey_id"] for r in q] == ["1"] and q[0]["parse_error"]
+    assert [r["code"] for r in parse_mod.good_records(out).collect()] == ["c-2"]
+
+
+def test_batch_spans_keep_alignment_past_null_lists():
+    """Arrow lets a NULL list own a child segment; slicing by offsets
+    must skip it, not shift every later document onto its spans."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    spans = pa.array(
+        [{"kind": "text", "text": t, "media_ref": "", "offset": i}
+         for i, t in enumerate("abcdef")],
+        to_arrow_type(schemas.SPAN),
+    )
+    lists = pa.ListArray.from_arrays(
+        pa.array([0, 2, 3, 6], pa.int32()), spans, mask=pa.array([False, True, False])
+    )
+    texts = [
+        None if doc is None else [t for _, t, _, _ in doc]
+        for doc in parse_mod._batch_spans(lists)
+    ]
+    assert texts == [["a", "b"], None, ["d", "e", "f"]]
+    assert [[t for _, t, _, _ in doc] for doc in parse_mod._batch_spans(lists[2:])] == [
+        ["d", "e", "f"]
+    ]
 
 
 def test_incremental_parse_skips_already_parsed(spark):

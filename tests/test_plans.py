@@ -15,7 +15,10 @@ import re
 import pytest
 
 from indigent_defense_stats_spark.operators import relational, textstats
-from indigent_defense_stats_spark.operators.parse import parse_documents
+from indigent_defense_stats_spark.operators.parse import (
+    good_records,
+    parse_documents,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -74,8 +77,13 @@ def test_parse_stage_has_zero_shuffles(spark):
         "'x' as county",
         "array(struct('text' as kind, text, '' as media_ref, 0 as offset)) as spans",
     )
-    p = _plan(parse_documents(docs))
-    assert "Exchange" not in p
+    # the parse returns Arrow structs: no from_json decode either, also
+    # in the plan the pipeline runs (the good filter pushed down to it)
+    for df in (parse_documents(docs), good_records(parse_documents(docs))):
+        p = _plan(df)
+        assert "MapInArrow" in p, p
+        assert "Exchange" not in p, p
+        assert "from_json" not in p and "JsonToStructs" not in p, p
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
