@@ -92,22 +92,23 @@ def top5_by(records: DataFrame, metric: str) -> DataFrame:
 
 def case_stats(records: DataFrame) -> DataFrame:
     """mean/median/mode of per-case charge counts (print_stats.py:41-47);
-    mode deterministic as smallest-most-frequent."""
-    counts = records.select(
-        "odyssey_id", F.size(F.coalesce("charges", F.array())).alias("n")
+    mode deterministic as smallest-most-frequent.
+
+    One global aggregate, i.e. one exchange: ``percentile`` and
+    ``mode`` each keep a value -> count histogram per partition, so the
+    shuffle moves one small map per task.  (A ``groupBy(n)`` histogram
+    aggregated again needs a second exchange, one more Spark job.)  No
+    input, no row."""
+    return (
+        records.select(F.size(F.coalesce("charges", F.array())).alias("n"))
+        .agg(
+            F.round(F.avg("n"), 4).alias("mean_charges"),
+            F.expr("percentile(n, 0.5)").alias("median_charges"),
+            F.count(F.lit(1)).alias("n_cases"),
+            F.expr("mode(n, true)").alias("mode_charges"),
+        )
+        .filter(F.col("n_cases") > 0)
     )
-    mode_df = (
-        counts.groupBy("n")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("n"))
-        .limit(1)
-        .select(F.col("n").alias("mode_charges"))
-    )
-    return counts.agg(
-        F.round(F.avg("n"), 4).alias("mean_charges"),
-        F.expr("percentile(n, 0.5)").alias("median_charges"),
-        F.count(F.lit(1)).alias("n_cases"),
-    ).crossJoin(mode_df)
 
 
 def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:

@@ -2,13 +2,14 @@
 
 Pure DataFrame program mirroring /root/reference/src/cleaner/__init__.py:
 
-- charge processing (cleaner:100-139): posexplode keeps the original
-  ordinal as charge_id (survivors keep their index — reference
-  enumerate semantics), date-parse failures drop the charge *before*
-  the UMich join (reference ``continue`` at :121), unmapped charges
-  drop via the inner broadcast join (:124-127) — but their parsed
-  dates still count toward earliest_charge_date (the reference appends
-  the date before attempting the mapping)
+- charge processing (cleaner:100-139): one posexplode keeps the
+  original ordinal as charge_id (survivors keep their index —
+  reference enumerate semantics) and one LEFT broadcast join maps the
+  charges to the dimension.  A date-parse failure never maps (the
+  reference's ``continue`` at :121 comes before the mapping), and an
+  unmapped charge (:124-127) keeps its row with a NULL charge_name —
+  so its parsed date still counts toward earliest_charge_date (the
+  reference appends the date before attempting the mapping)
 - good motions semi-scan over ragged event rows (cleaner:141-155) as a
   pure array expression — no join, no UDF
 - judicial-officer / additional_info redaction by struct re-projection
@@ -16,9 +17,14 @@ Pure DataFrame program mirroring /root/reference/src/cleaner/__init__.py:
 - xxh64-hex redaction hashes (cleaner:29-32, 157-164) — the only
   Python (Arrow-batched) in the stage
 
-Everything shuffles once (the charge regroup); the dimension join is
-broadcast.  At 100 TB the charge regroup co-partitions with the input
-if case_records is bucketed by odyssey_id.
+One aggregate regroups the exploded charges by odyssey_id, the one
+shuffle of the stage: ``min(charge_dt)`` over every dated charge and
+``collect_list`` of the mapped ones (``collect_list`` skips the NULL
+an unmapped charge yields), and one join takes the result back to the
+per-case projection.  The dimension join is broadcast; AQE turns the
+final join into a broadcast of the regrouped side while that side is
+small.  At 100 TB the regroup co-partitions with the input if
+case_records is bucketed by odyssey_id.
 """
 
 from __future__ import annotations
@@ -43,15 +49,14 @@ def clean_records(
     records: DataFrame, charge_dim: DataFrame, parsing_date: str
 ) -> DataFrame:
     """case_records -> case_records_clean (schemas.CASE_RECORDS_CLEAN)."""
-    # NOTE on pin-shared-subplans: records and dated are deliberately
-    # NOT localCheckpoint-pinned although each feeds two consumers —
-    # records is a WIDE nested table whose consumers prune different
-    # narrow slices (materializing every column measured +15% warm /
-    # +50% cold at sf0.1 vs the dual pruned derivation), and pinning
-    # even the narrow dated slice breaks whole-stage-codegen fusion of
-    # the explode into its aggregates for the same net loss.  The pin
-    # discipline pays only for SMALL derived tables with EXPENSIVE
-    # upstreams (tf aggregates, shingle indexes) — not here.
+    # NOTE on pin-shared-subplans: records is deliberately NOT
+    # localCheckpoint-pinned although it feeds two consumers (the
+    # charge explode and the base projection) — it is a WIDE nested
+    # table whose consumers prune different narrow slices
+    # (materializing every column measured +15% warm / +50% cold at
+    # sf0.1 vs the dual pruned derivation).  The pin discipline pays
+    # only for SMALL derived tables with EXPENSIVE upstreams (tf
+    # aggregates, shingle indexes) — not here.
     # ---- charges: explode with original ordinal --------------------------
     ch = records.select(
         F.col("odyssey_id"),
@@ -66,17 +71,13 @@ def clean_records(
         # ``continue`` on strptime failure, cleaner:113-121) — ANSI-safe
         F.expr("try_to_date(ch.date, 'MM/dd/yyyy')").alias("charge_dt"),
     )
-    dated = ch.filter(F.col("charge_dt").isNotNull())
-    # earliest date counts every date-valid charge, mapped or not
-    earliest = dated.groupBy("odyssey_id").agg(
-        F.date_format(F.min("charge_dt"), "yyyy-MM-dd").alias(
-            "earliest_charge_date"
-        )
-    )
-    mapped = dated.join(
+    # left join: an unmapped charge keeps its row (charge_name NULL),
+    # so its date still counts toward earliest_charge_date; an undated
+    # charge never maps (cleaner:121, 124-127)
+    joined = ch.join(
         F.broadcast(charge_dim),
-        dated.orignal_charge == charge_dim.charge_name,
-        "inner",
+        (ch.orignal_charge == charge_dim.charge_name) & ch.charge_dt.isNotNull(),
+        "left",
     )
     clean_charge = F.struct(
         F.col("pos").alias("charge_id"),
@@ -91,13 +92,15 @@ def clean_records(
         F.col("offense_category_desc"),
         F.col("offense_type_desc"),
     )
-    charges_by_case = (
-        mapped.groupBy("odyssey_id")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", clean_charge.alias("c")))).alias("cs"))
-        .select(
-            "odyssey_id",
-            F.transform("cs", lambda x: x["c"]).alias("charges"),
-        )
+    # NULL for an unmapped charge, which collect_list skips
+    mapped = F.when(
+        F.col("charge_name").isNotNull(), F.struct("pos", clean_charge.alias("c"))
+    )
+    charges_by_case = joined.groupBy("odyssey_id").agg(
+        F.transform(
+            F.sort_array(F.collect_list(mapped)), lambda x: x["c"]
+        ).alias("charges"),
+        F.date_format(F.min("charge_dt"), "yyyy-MM-dd").alias("earliest_charge_date"),
     )
 
     # ---- scalar projections / redactions ---------------------------------
@@ -149,8 +152,6 @@ def clean_records(
     )
     out = (
         base.join(charges_by_case, base.case_number == charges_by_case.odyssey_id, "left")
-        .drop("odyssey_id")
-        .join(earliest, base.case_number == earliest.odyssey_id, "left")
         .drop("odyssey_id")
         .withColumn("charges", F.coalesce("charges", F.array()))
         .withColumn("earliest_charge_date", F.coalesce("earliest_charge_date", F.lit("")))

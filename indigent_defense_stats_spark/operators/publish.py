@@ -19,7 +19,7 @@ max-version aggregate prunes to the join keys.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
 from ..sources.catalog import SnapshotTable
 
@@ -46,7 +46,17 @@ def publish(
     ``html_hash`` keys are broadcast against the FULL published
     history's ``html_hash`` column (history ⋉ broadcast(batch keys) →
     broadcast anti) — column-pruned, map-side, never shuffled; one
-    hash-column scan per publish."""
+    hash-column scan per publish.  The batch's ``case_number`` keys
+    are broadcast the same way to prune the max-version aggregate.
+    Both key sets are taken from *cleaned* as given: its hash set is
+    the within-batch dedup's own, and its case set is a superset of
+    the inserted rows' cases, which leaves the version join unchanged.
+
+    No Spark job runs just to test a condition: an empty history is
+    read and joined like any other (it yields no seen hashes and no
+    base versions), and the inserted row count that decides whether a
+    snapshot is written is an ``Observation`` filled by the
+    checkpoint's own job."""
     if getattr(target, "mode", None) == "overwrite" and target.latest() is not None:
         # an overwrite-mode target keeps only the latest batch, so a
         # SECOND direct publish would forget earlier hashes and
@@ -71,10 +81,7 @@ def publish(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # batch key set for the base_versions pruning below — captured
-    # before the anti-join reassigns `incoming`
-    incoming_keys = incoming.select("case_number").distinct()
-    if existing is not None and not existing.isEmpty():
+    if existing is not None:
         # broadcast-semi rewrite of the anti-join (round-5): a
         # LeftAnti against the history would sort-merge — i.e.
         # SHUFFLE the full history hash column per publish, since
@@ -86,24 +93,24 @@ def publish(
         # Identical result set; the history column is scanned, never
         # exchanged.  Measured (BENCH/scaling.json publishbloom
         # cells): this is the dominant publish cost at every decade.
+        # The semi side broadcasts ``cleaned``'s hashes, the same set
+        # as the window's output, so the window runs once, on the
+        # anti-join side.
         seen = existing.select("html_hash").join(
-            F.broadcast(incoming.select("html_hash")),
-            "html_hash",
-            "left_semi",
+            F.broadcast(cleaned.select("html_hash")), "html_hash", "left_semi"
         )
-        incoming = incoming.join(
-            F.broadcast(seen), "html_hash", "left_anti"
-        )
+        incoming = incoming.join(F.broadcast(seen), "html_hash", "left_anti")
         # prune the max-version aggregate to the batch's case_numbers
         # BEFORE aggregating: the key set is batch-bounded (broadcast
         # semi), so the history contributes a map-side filtered scan
-        # instead of a full-table groupBy shuffle per publish.  Keys
-        # are taken from the PRE-anti-join batch — a superset of the
-        # inserted set, so the later left join is unchanged; reusing
-        # the post-anti-join plan here would re-run the anti-join.
-        batch_keys = incoming_keys.localCheckpoint(eager=True)
+        # instead of a full-table groupBy shuffle per publish.  The
+        # keys are the whole batch's — a superset of the inserted set,
+        # so the later left join is unchanged; duplicate keys cannot
+        # change a semi-join, so there is no distinct.
         base_versions = (
-            existing.join(F.broadcast(batch_keys), "case_number", "left_semi")
+            existing.join(
+                F.broadcast(cleaned.select("case_number")), "case_number", "left_semi"
+            )
             .groupBy("case_number")
             .agg(F.max("version").alias("base_version"))
         )
@@ -132,15 +139,16 @@ def publish(
             F.col("html_hash"),
         ),
     ).drop("batch_seq", "base_version")
-    # localCheckpoint (not cache): the emptiness probe, the snapshot
-    # write, and the caller's action would otherwise each re-run the
-    # anti-join + window plan — and an open-ended cache() leaks
-    # storage across repeated publishes in a long-lived session; the
-    # checkpoint's blocks are reclaimed by the ContextCleaner when the
-    # plan is garbage-collected
-    out = out.localCheckpoint(eager=True)
-
-    if out.isEmpty():
+    # localCheckpoint (not cache): the snapshot write and the caller's
+    # action would otherwise each re-run the anti-join + window plan —
+    # and an open-ended cache() leaks storage across repeated publishes
+    # in a long-lived session; the checkpoint's blocks are reclaimed by
+    # the ContextCleaner when the plan is garbage-collected.  The row
+    # count rides along as an Observation, filled by the checkpoint's
+    # own job: no separate emptiness probe
+    obs = Observation()
+    out = out.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    if obs.get["n"] == 0:
         return out
     target.write(out, {"event": "publish"})
     return out

@@ -9,8 +9,8 @@ scale-relevant ones:
   only active county, Hays, dominates its registry:
   /root/reference/resources/texas_county_data.csv) reappears at
   10^10-URL scale as host-key skew in the frontier shuffle.
-- Arrow enabled with a capped batch size so the vectorized parse UDFs
-  (mapInPandas over span sequences) keep bounded executor memory even
+- Arrow enabled with a capped batch size so the vectorized parse
+  (mapInArrow over span sequences) keeps bounded executor memory even
   for pathological documents.
 - shuffle partitions default to a small-cluster value; callers running
   at scale override via ``shuffle_partitions`` (rule of thumb: 2-3x

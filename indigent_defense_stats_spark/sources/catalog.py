@@ -40,6 +40,24 @@ def parquet_dir_rows(path: str) -> int:
     return total
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_footer_schema(path: str) -> StructType | None:
+    """The schema a Spark write stored in the footer of a part file
+    under *path* (the key ``spark.read.parquet`` itself prefers), read
+    on the driver; None when no part file carries one (e.g. a
+    ``write_local`` snapshot), which leaves inference to Spark."""
+    import pyarrow.parquet as pq
+
+    for name in sorted(os.listdir(path)):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            meta = pq.read_schema(os.path.join(path, name)).metadata or {}
+            if _SPARK_SCHEMA_KEY in meta:
+                return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
+
+
 def parquet_dir_bytes(path: str) -> int:
     total = 0
     for name in os.listdir(path):
@@ -153,11 +171,15 @@ class SnapshotTable:
             ]
         if not paths:
             return None
-        # a declared schema spares the one-task parquet footer job that
-        # schema inference runs on every read
+        # a known schema spares the one-task parquet footer job that
+        # schema inference runs on every read: the declared one, else
+        # the one Spark wrote into the newest snapshot's footer
+        schema = self.schema
+        if schema is None:
+            schema = _spark_footer_schema(paths[-1])
         reader = self.spark.read
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(*paths)
 
     def read_local(self):

@@ -1,7 +1,7 @@
 """Observation (CollectMetrics) surface: data-quality counters ride
 an existing action as side-channel accumulators instead of a second
 pass over the stage.  run_pipeline.py uses this to get good +
-quarantined parse counts from ONE execution of the mapInPandas parse
+quarantined parse counts from ONE execution of the mapInArrow parse
 (counting each derived frame separately re-runs the parse per count).
 
 Pinned here: (1) the metrics equal independently recomputed

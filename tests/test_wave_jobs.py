@@ -5,10 +5,10 @@ Each Spark job costs a wave scheduling, a stage and at least one task
 however little data it moves, and a crawl's waves are dominated by
 that fixed cost (ROADMAP item 2).  The crawl below runs one wave per
 ``run(max_waves=1)`` call and counts the jobs each call submits, and
-the stages those jobs ran, with the status tracker, so a change that
-adds a job or a stage to the wave fails here.  The bounds are the
-counts measured on the code that set them; lower them when a change
-cuts a job or a stage.
+the stages those jobs ran, with the status tracker
+(``conftest.SparkJobCounter``), so a change that adds a job or a stage
+to the wave fails here.  The bounds are the counts measured on the
+code that set them; lower them when a change cuts a job or a stage.
 
 The crawl tables are read with their declared schemas (no footer
 inference), so a parquet column whose type drifted from the
@@ -38,51 +38,20 @@ WAVE_JOBS = [12, 13, 13, 14]
 WAVE_STAGES = [12, 13, 13, 14]
 
 
-def _jobs_so_far(sc) -> int:
-    """Highest job id the status tracker has seen (-1 before any).
-    Job-start events reach the tracker through the async listener bus,
-    so drain it first."""
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
-
-
-def _stages_ran(sc, jobs: range, counted: set[int]) -> int:
-    """Stages of ``jobs`` that ran tasks and are not in ``counted``
-    (which they join).  A skipped stage completes no task; the status
-    store, once over ``spark.ui.retainedStages``, drops skipped stages
-    first (they have no completion time), so a missing one is skipped
-    too."""
-    st = sc.statusTracker()
-    ran = set()
-    for j in jobs:
-        for sid in st.getJobInfo(j).stageIds:
-            info = st.getStageInfo(sid)
-            if info is not None and info.numCompletedTasks > 0:
-                ran.add(sid)
-    ran -= counted
-    counted |= ran
-    return len(ran)
-
-
 @pytest.fixture(scope="module")
-def crawl(spark, tmp_path_factory):
+def crawl(spark, tmp_path_factory, spark_job_counter):
     reg = synth.make_registry(3, n_scrape=2)
     eng = CrawlEngine(
         spark, str(tmp_path_factory.mktemp("wave_jobs")), reg, START, N_DAYS
     )
-    sc = spark.sparkContext
-    last = _jobs_so_far(sc)
+    counter = spark_job_counter()
     eng.run(max_waves=0)  # the seed write alone
-    now = _jobs_so_far(sc)
-    counted: set[int] = set()
-    _stages_ran(sc, range(last + 1, now + 1), counted)
-    seed_jobs, last = now - last, now
+    seed_jobs, _ = counter.step()
     wave_jobs, wave_stages = [], []
     while eng.run(max_waves=1):
-        now = _jobs_so_far(sc)
-        wave_jobs.append(now - last)
-        wave_stages.append(_stages_ran(sc, range(last + 1, now + 1), counted))
-        last = now
+        jobs, stages = counter.step()
+        wave_jobs.append(jobs)
+        wave_stages.append(stages)
     return eng, reg, seed_jobs, wave_jobs, wave_stages
 
 
